@@ -9,8 +9,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * columnar (Parquet) sink + optional index sidecar.
   *
   * The reference's whole-file-in-RAM pipeline (`index.js:552`) becomes
-  * two Spark jobs: a bounded sampling aggregate that decides the schema
-  * (TypeInference.infer) and one full declarative pass that casts and
+  * a bounded sampling aggregate that decides the schema (one narrow
+  * count job plus one two-shuffle aggregation in TypeInference.infer,
+  * 4 Spark jobs under AQE) and one full declarative pass that casts and
   * writes — the 100 TB shape: no rows ever reach the driver, the write
   * is embarrassingly parallel, and Parquet supplies the dictionary
   * encoding the reference hand-rolls (O10/O13).

@@ -86,19 +86,17 @@ object Dates {
   private def guarded(c: Column, fmt: String): Column =
     c.rlike(GuardRe(fmt))
 
-  /** 1 iff `c` (non-null) strictly parses with `fmt` and has the
+  /** True iff `c` (non-null) strictly parses with `fmt` and has the
     * reference's candidate length 8–10 (`index.js:186,306`). */
   def parses(c: Column, fmt: String): Column =
-    when(length(c).between(8, 10) && guarded(c, fmt) &&
-      try_to_date(c, fmt).isNotNull, 1)
-      .otherwise(0)
+    length(c).between(8, 10) && guarded(c, fmt) &&
+      try_to_date(c, fmt).isNotNull
 
   /** Timestamp analogue of [[parses]]: candidate length 14 (minimal
     * `yyyy-M-d H:m:s`) to 23 (full fraction), strict parse. */
   def tparses(c: Column, fmt: String): Column =
-    when(length(c).between(14, 23) && guarded(c, fmt) &&
-      try_to_timestamp(c, lit(fmt)).isNotNull, 1)
-      .otherwise(0)
+    length(c).between(14, 23) && guarded(c, fmt) &&
+      try_to_timestamp(c, lit(fmt)).isNotNull
 
   /** Normalize with a locked format; unparseable → NULL (intended
     * semantics for Q6). */

@@ -26,10 +26,14 @@ case class IngestSchema(
   * first `scan` rows (`scan = N<1000 ? N : max(1000, 0.3N)`,
   * `index.js:220-221`). Seed-then-demote over a prefix is equivalent to
   * evaluating the whole prefix at once on the lattice
-  * int → double → string, which is what we do: a single `agg` computes,
-  * per column, the counts of values that survive `try_cast` at each
-  * lattice level, per-format strict date-parse counts, and the distinct
-  * count — so inference costs exactly one job regardless of column count
+  * int → double → string, which is what we do: the prefix is exploded
+  * to (column, value) pairs and grouped to distinct values with their
+  * multiplicity; a second grouping per column counts the distinct
+  * values and sums the multiplicities of the values that survive
+  * `try_cast` at each lattice level and each strict date parse. Every
+  * predicate runs once per distinct value and the plan does not grow
+  * with the column count. Cost: one narrow count job plus one
+  * two-shuffle aggregation, 4 Spark jobs under AQE
   * (SURVEY.md §7 "inference at 100 TB": never one job per column, never
   * a driver-side collect of rows).
   *
@@ -58,38 +62,23 @@ object TypeInference {
   private val IntMax = Int.MaxValue.toLong
 
   /** Infer a schema for `df` (any input types; cells are canonicalized
-    * as strings first, mirroring the CSV path). One count job + one
-    * aggregation job. */
-  // step timers to stderr when SPARK_GRAFT_INGEST_DEBUG is set — the
-  // CLI's -v phase timers are reference-shaped (coarse); this is the
-  // inference-internal breakdown for perf work
-  private def dbg[A](what: String)(body: => A): A =
-    if (!sys.env.contains("SPARK_GRAFT_INGEST_DEBUG")) body
-    else {
-      val t0 = System.nanoTime()
-      val a = body
-      System.err.println(
-        s"[infer] $what: ${(System.nanoTime() - t0) / 1000000} ms")
-      a
-    }
-
+    * as strings first, mirroring the CSV path). One narrow count job,
+    * then one two-shuffle aggregation over the prefix. */
   def infer(df: DataFrame, parseDates: Boolean = false,
       scanCap: Long = DefaultScanCap): IngestSchema = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
     val cols = df.columns.toSeq
-    // ONE narrow pass yields both the full row count (Σ per-partition)
-    // and the per-partition counts the parallel prefix take needs —
-    // replacing the separate df.count() job AND the df.limit(k) prefix,
-    // whose GlobalLimit pulled the whole scan prefix through ONE task
-    // (measured: 36.6 s of the 41 s lineitem-sf0.1 CLI ingest ran the
-    // inference on a single core; at a 100 TB input the 2M-row capped
-    // prefix would still funnel ~hundreds of MB through one task).
-    val pidCounts = dbg("count")(df
-      .groupBy(spark_partition_id().as("__pid")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1))
-    val n = pidCounts.map(_._2).sum
+    // Rows per partition in one narrow pass, keyed by the VALUE of
+    // spark_partition_id() rather than the RDD partition index: for a
+    // local-relation frame (createDataFrame) the optimizer folds it to 0
+    // while the RDD still has several partitions, and the prefix filter
+    // below sees that same folded value.
+    val perPid = df.select(spark_partition_id()).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val c = scala.collection.mutable.LongMap.empty[Long]
+        rows.foreach(r => c(r.getInt(0)) = c.getOrElse(r.getInt(0), 0L) + 1)
+        c.iterator
+      }.collect().groupMapReduce(_._1.toInt)(_._2)(_ + _).toSeq.sorted
+    val n = perPid.map(_._2).sum
     if (n == 0 || cols.isEmpty) {
       // index.js:134 — empty input → empty result
       return IngestSchema(
@@ -97,117 +86,61 @@ object TypeInference {
           categorical = false, 0L)), 0L, 0L, 0.0)
     }
     val scan = scanCount(n, scanCap)
-    // Prefix sample, positionally renamed so expr() below never has to
-    // quote hostile column names. Clamp before toInt: a >2^31 scanCap
-    // would overflow into limit(1) silently.
-    val limitRows = math.min(scan, Int.MaxValue.toLong).toInt.max(1)
-    // Parallel prefix take, no GlobalLimit: each partition knows from
-    // the driver-side cumulative counts how many of ITS rows fall in
-    // the first `limitRows` (partition order = split order, the same
-    // order limit() consumes), and `monotonically_increasing_id` is
-    // (pid << 33) + row-in-partition, so the local row number needs no
-    // shuffle at all. The broadcast of the per-partition quota frame
-    // is P rows. Partitions past the boundary take 0 rows and finish
-    // on file-open. Same row SET as df.limit(limitRows).
-    val sp = df.sparkSession
-    val offsets = pidCounts.scanLeft(0L)(_ + _._2)
-    val need = pidCounts.zip(offsets).map { case ((pid, cnt), off) =>
-      (pid, math.min(math.max(limitRows.toLong - off, 0L), cnt)) }
-    import sp.implicits._
-    val needDf = need.toSeq.toDF("__pid", "__need")
-    val prefix = df
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__lrn", monotonically_increasing_id() -
-        shiftleft(spark_partition_id().cast(LongType), 33))
-      .join(broadcast(needDf), "__pid")
-      .filter(col("__lrn") < col("__need"))
-    // everything downstream — the per-format strict date parses and
-    // the distinct transpose — fans across the executor pool; one
-    // round-robin exchange of the bounded prefix (≤ scanCap narrow
-    // rows, the cheap side) feeds it. Pure repartition of a counted
-    // multiset: every aggregate below is partition-order-insensitive,
-    // so the inferred schema is byte-identical.
-    val par = math.max(1, df.sparkSession.sparkContext.defaultParallelism)
-    val canon = prefix.repartition(par).select(
-      cols.zipWithIndex.map { case (c, i) =>
-        Nulls.canonicalize(col(c).cast(StringType)).as(s"c$i")
-      }: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val aggs = cols.indices.flatMap { i =>
-      val c = col(s"c$i")
-      Seq(
-        count(c).as(s"nn_$i"),
-        count(expr(s"try_cast(c$i AS BIGINT)")).as(s"lng_$i"),
-        count(when(expr(s"try_cast(c$i AS BIGINT)").between(IntMin, IntMax),
-          1)).as(s"int_$i"),
-        count(expr(s"try_cast(c$i AS DOUBLE)")).as(s"dbl_$i")
-      ) ++ (if (parseDates) Dates.Formats.zipWithIndex.map { case (f, k) =>
-        sum(Dates.parses(c, f)).as(s"fmt${k}_$i")
-      } else Nil) ++
-        (if (parseDates) Dates.TimestampFormats.zipWithIndex.map {
-          case (f, k) => sum(Dates.tparses(c, f)).as(s"tfmt${k}_$i")
-        } else Nil)
+    // Parallel prefix take, no GlobalLimit: partition order is split
+    // order (the order limit() consumes), so each partition's quota of
+    // the first `limitRows` rows follows from the cumulative counts.
+    // `monotonically_increasing_id` is (pid << 33) + row-in-partition,
+    // so the local row number needs no shuffle, and partitions past the
+    // boundary take 0 rows. Same row SET as df.limit(limitRows).
+    val limitRows = scan.max(1)
+    val need = Array.fill(perPid.last._1 + 1)(0L)
+    perPid.zip(perPid.scanLeft(0L)(_ + _._2)).foreach {
+      case ((pid, cnt), off) => need(pid) = (limitRows - off).max(0).min(cnt)
     }
-    // Distinct counts run as their OWN transpose job, not as
-    // `count_distinct` columns in the agg above: N count_distincts in
-    // one aggregate plan through an Expand that multiplies the scan
-    // ×(N+1) and whose generated projections (N+1 rows × every agg
-    // buffer) blow whole-stage codegen into janino-compile seconds of
-    // pure fixed cost (measured ~6 s of an 8.7 s inference phase on a
-    // 4.5k-row, 8-column file). The transpose is linear and
-    // codegen-small: explode to (column-index, value), two-phase
-    // distinct, count per column — still EXACT, same numbers.
-    // materialize the cached prefix with one cheap job, then run the
-    // two independent consumers CONCURRENTLY — the type-vote agg (the
-    // per-format parse work) and the distinct transpose each leave
-    // most of the core pool idle between stages; overlapping them
-    // costs nothing on a cluster (shared executor pool) and turns
-    // sequential job latency into max() on a single node
-    dbg("materialize")(canon.count())
-    val aggF = Future(
-      dbg("agg")(canon.agg(aggs.head, aggs.tail: _*).collect()(0)))
-    val dctRows = dbg("dct")(canon
-      .select(posexplode(array(cols.indices.map(i => col(s"c$i")): _*))
-        .as(Seq("i", "v")))
-      .where(col("v").isNotNull)
-      .groupBy("i", "v").agg(first(lit(1)))
-      .groupBy("i").agg(count(lit(1)).as("dct"))
-      .collect())
-    val dcts = dctRows.map(row => row.getInt(0) -> row.getLong(1)).toMap
-    val r = dbg("agg-await")(Await.result(aggF, Duration.Inf))
-    canon.unpersist(blocking = false)
+    val pid = spark_partition_id()
+    val prefix = df.filter(
+      monotonically_increasing_id() - shiftleft(pid.cast(LongType), 33) <
+        try_element_at(typedLit(need), pid + 1))
+    // (column, value) → multiplicity m, then per column: dct = #values,
+    // nn = Σm and one vote Σm·[pred(v)] per lattice level and format
+    val (v, m) = (col("v"), col("m"))
+    val asLong = v.try_cast(LongType)
+    val preds = Seq(asLong.isNotNull, asLong.between(IntMin, IntMax),
+      v.try_cast(DoubleType).isNotNull) ++ (if (parseDates)
+        Dates.Formats.map(Dates.parses(v, _)) ++
+          Dates.TimestampFormats.map(Dates.tparses(v, _))
+      else Nil)
+    val stats = prefix
+      .select(posexplode(array(cols.map(c =>
+        Nulls.canonicalize(col(c).cast(StringType))): _*)).as(Seq("i", "v")))
+      .where(v.isNotNull)
+      .groupBy("i", "v").agg(count(lit(1)).as("m"))
+      .groupBy("i").agg(count(lit(1)),
+        sum(m) +: preds.map(p => sum(when(p, m).otherwise(0L))): _*)
+      .collect()
+      .map(r => r.getInt(0) -> (1 until r.length).map(r.getLong)).toMap
     val thresh = Categorical.threshold(n, scan)
     val fields = cols.zipWithIndex.map { case (c, i) =>
-      val nn = r.getAs[Long](s"nn_$i")
-      val lng = r.getAs[Long](s"lng_$i")
-      val intOk = r.getAs[Long](s"int_$i")
-      val dbl = r.getAs[Long](s"dbl_$i")
-      val dct = dcts.getOrElse(i, 0L)
-      val surviving = if (parseDates && nn > 0)
-        Dates.Formats.zipWithIndex.filter { case (_, k) =>
-          Option(r.getAs[Any](s"fmt${k}_$i"))
-            .exists(_.asInstanceOf[Long] == nn)
-        }.map(_._1)
-      else Nil
-      // datetime lattice step (extension — the date and timestamp
-      // candidate families are disjoint on any single value: a 8–10
-      // char date can never parse a 14+ char datetime pattern and vice
-      // versa, so the two votes cannot both survive)
-      val tsSurviving = if (parseDates && nn > 0)
-        Dates.TimestampFormats.zipWithIndex.filter { case (_, k) =>
-          Option(r.getAs[Any](s"tfmt${k}_$i"))
-            .exists(_.asInstanceOf[Long] == nn)
-        }.map(_._1)
-      else Nil
+      // an all-null column has no values: dct = nn = 0
+      val s = stats.getOrElse(i, Seq.fill(2 + preds.size)(0L))
+      val Seq(dct, nn, lng, intOk, dbl) = s.take(5)
+      // exactly-one-surviving-format rule, index.js:373-378; the date
+      // and timestamp candidate families are disjoint on any single
+      // value (a 8–10 char date can never parse a 14+ char datetime
+      // pattern and vice versa), so the two votes cannot both survive
+      def surviving(fs: Seq[String], votes: Seq[Long]) =
+        fs.zip(votes).collect { case (f, k) if k == nn => f }
+      val dates = surviving(Dates.Formats, s.drop(5))
+      val stamps = surviving(Dates.TimestampFormats,
+        s.drop(5 + Dates.Formats.size))
       val (dt, fmt): (DataType, Option[String]) =
         if (nn == 0) (IntegerType, None) // all-null seeds int32, index.js:183-185
         else if (lng == nn && intOk == nn) (IntegerType, None)
         else if (lng == nn) (LongType, None)
         else if (dbl == nn) (DoubleType, None)
-        // exactly-one-surviving-format rule, index.js:373-378
-        else if (surviving.size == 1) (DateType, Some(surviving.head))
         // int → long → double → date → TIMESTAMP → str
-        else if (tsSurviving.size == 1) (TimestampType, Some(tsSurviving.head))
+        else if (dates.size == 1) (DateType, Some(dates.head))
+        else if (stamps.size == 1) (TimestampType, Some(stamps.head))
         else (StringType, None)
       FieldMeta(c, Sanitize(c), dt, fmt,
         Categorical.isCategorical(dct, thresh), dct)
@@ -229,9 +162,8 @@ object TypeInference {
     }: _*)
     canon.select(schema.fields.map { f =>
       val c = f.dataType match {
-        case IntegerType => expr(s"try_cast(${f.sanitized} AS INT)")
-        case LongType    => expr(s"try_cast(${f.sanitized} AS BIGINT)")
-        case DoubleType  => expr(s"try_cast(${f.sanitized} AS DOUBLE)")
+        case t @ (IntegerType | LongType | DoubleType) =>
+          col(f.sanitized).try_cast(t)
         case DateType      => Dates.normalize(col(f.sanitized), f.dateFormat.get)
         case TimestampType => Dates.normalizeTs(col(f.sanitized), f.dateFormat.get)
         case _             => col(f.sanitized)

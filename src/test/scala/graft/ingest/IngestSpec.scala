@@ -114,6 +114,69 @@ class IngestSpec extends AnyFunSuite {
       Seq("2024-01-02 13:45:00.0", "2024-02-03 04:05:06.0"))
   }
 
+  test("numeric header: the cast reads the column, not a SQL literal") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_numhdr")
+    val f = dir.resolve("n.csv")
+    java.nio.file.Files.writeString(f, "2024,total\n5,7\n6,8\n")
+    val r = Collimate(spark, f.toString)
+    assert(r.df.columns.toSeq == Seq("2024", "total"))
+    assert(r.df.collect().map(row => (row.getInt(0), row.getInt(1))).toSeq
+      .sorted == Seq((5, 7), (6, 8)))
+    graft.Util.rmrf(dir.toFile)
+  }
+
+  test("inference prefix does not depend on partitioning") {
+    // 3000 rows → a 1000-row prefix; every row past it carries a value
+    // that would demote `v` to string, and `id` counts the prefix rows
+    val dir = java.nio.file.Files.createTempDirectory("graft_prefix")
+    val f = dir.resolve("p.csv")
+    java.nio.file.Files.writeString(f, (0 until 3000).map(i =>
+      s"$i,${if (i < 1000) i.toString else "x"}").mkString("id,v\n", "\n", "\n"))
+    def inferAt(splitBytes: Option[String]): (IngestSchema, Int) = {
+      val key = "spark.sql.files.maxPartitionBytes"
+      splitBytes.foreach(spark.conf.set(key, _))
+      try {
+        val df = Collimate.read(spark, f.toString)
+        (TypeInference.infer(df), df.rdd.getNumPartitions)
+      } finally spark.conf.unset(key)
+    }
+    val (whole, _) = inferAt(None)
+    val (split, parts) = inferAt(Some("4096"))
+    assert(parts >= 4)
+    assert(split == whole)
+    assert(whole.rowCount == 3000 && whole.scanned == 1000)
+    assert(whole.fields.map(f => f.name -> (f.dataType, f.distinct)) ==
+      Seq("id" -> (IntegerType, 1000L), "v" -> (IntegerType, 1000L)))
+    graft.Util.rmrf(dir.toFile)
+    // local-relation frame: spark_partition_id() folds to 0 while its
+    // RDD has several partitions; the whole frame is the prefix
+    import scala.jdk.CollectionConverters._
+    val local = spark.createDataFrame(
+      (0 until 150).map(i => org.apache.spark.sql.Row(i.toString)).asJava,
+      StructType(Seq(StructField("id", StringType))))
+    val s = TypeInference.infer(local)
+    assert(s.rowCount == 150 && s.scanned == 150)
+    assert(s.fields.head.distinct == 150)
+  }
+
+  test("inference runs at most 4 Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val df = Collimate.read(spark, fixture("late_surprise.csv"))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      TypeInference.infer(df, parseDates = true)
+      org.apache.spark.graft.ListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get > 0 && jobs.get <= 4, s"${jobs.get} jobs")
+  }
+
   test("sanitize replicates the reference chain (O12)") {
     assert(Sanitize(" First-Name ") == "first_name")
     assert(Sanitize("A&B") == "aandb")
