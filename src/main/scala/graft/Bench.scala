@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 
 /** Perf harness: runs the headline queries (the compute-heavy
   * representatives of each operator family — ingest roundtrips are
@@ -98,6 +98,65 @@ object Bench {
     * "one GC-excursion run re-wrote blocks" (environment). */
   final case class RunStat(sec: Double, shufWMb: Double, shufRMb: Double,
       spillMb: Double)
+
+  /** The one timing path of Bench and Profile: a between-runs reset plus
+    * timed runs with their shuffle/spill bytes. The bytes are task-metric
+    * counters accumulated by a listener ("measure, don't guess" for the
+    * plan dimension the wall clock hides): a query whose time looks fine
+    * but whose shuffle bytes grew 10× is a scale regression the timing
+    * alone would miss at sf0.1. */
+  final class Meter(spark: SparkSession) {
+    private val shufW = new AtomicLong
+    private val shufR = new AtomicLong
+    private val spill = new AtomicLong
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+        val m = t.taskMetrics
+        if (m != null) {
+          shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          shufR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+          spill.addAndGet(m.diskBytesSpilled + m.memoryBytesSpilled)
+        }
+      }
+    })
+
+    /** clearCache() drops catalog-cached relations but NOT
+      * localCheckpoint RDD blocks, which linger until their RDD is
+      * GC'd — the 3× probe's storage telemetry showed them accumulating
+      * to hundreds of MB across iterative-graph queries and pressuring
+      * later ones. Between runs every frame is dead, so force-unpersist
+      * is safe. */
+    def clear(): Unit = {
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = false))
+      // quiesce the heap before the timed section starts: in a full
+      // 65-query run the iterative-graph queries measured 2× their
+      // own same-hour isolated numbers (tight spreads, zero spill,
+      // identical shuffle bytes) — accumulated garbage from earlier
+      // queries was being collected inside later queries' timed runs.
+      // clear() is always called OUTSIDE the timing window, so the
+      // forced full GC costs wall clock but never inflates a number.
+      System.gc()
+    }
+
+    /** One timed run of `body` with its own byte attribution: the
+      * listener bus is drained before the counter snapshot and again
+      * before the delta, so late task-end events can't attribute a
+      * neighbor run's bytes. */
+    def timed(body: => Unit): RunStat = {
+      clear()
+      GraftBridge.flushListenerBus(spark)
+      val (w0, r0, sp0) = (shufW.get, shufR.get, spill.get)
+      val t0 = System.nanoTime()
+      body
+      val sec = math.round((System.nanoTime() - t0) / 1e9 * 1000) / 1000.0
+      GraftBridge.flushListenerBus(spark)
+      def mb(bytes: Long) = math.round(bytes / 1e6 * 10) / 10.0
+      RunStat(sec, mb(shufW.get - w0), mb(shufR.get - r0),
+        mb(spill.get - sp0))
+    }
+  }
 
   /** Excursion policy (r10 verdict item 2): a timed run whose wall
     * clock exceeds `factor`× the query's own in-triple minimum — by at
@@ -199,21 +258,8 @@ object Bench {
     // anomalous record self-diagnoses instead of reading as a plan
     // regression.
     val guard = tools.RunGuard.acquire("graft.Bench")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // "*" is legal for local[*] but not for shuffle.partitions (an int
-    // conf) — resolve it to the actual core count so both stay in step
-    val shuffleParts = if (cpus.matches("[0-9]+")) cpus
-      else Runtime.getRuntime.availableProcessors().toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.Cpus
+    val spark = Sessions.local()
     // warm the JVM/codegen once on the smallest sf so per-query numbers
     // measure the query, not first-job session setup
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
@@ -224,24 +270,6 @@ object Bench {
     // can't pressure the next one's executors.
     val timedRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     def run(name: String): Unit = SparkEntry.queries(name)(spark, sfDir).count()
-    // clearCache() drops catalog-cached relations but NOT localCheckpoint
-    // RDD blocks, which linger until their RDD is GC'd — the 3× probe's
-    // storage telemetry showed them accumulating to hundreds of MB
-    // across iterative-graph queries and pressuring later ones. Between
-    // bench queries every frame is dead, so force-unpersist is safe.
-    def clear(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      // quiesce the heap before the timed section starts: in a full
-      // 65-query run the iterative-graph queries measured 2× their
-      // own same-hour isolated numbers (tight spreads, zero spill,
-      // identical shuffle bytes) — accumulated garbage from earlier
-      // queries was being collected inside later queries' timed runs.
-      // clear() is always called OUTSIDE the timing window, so the
-      // forced full GC costs wall clock but never inflates a number.
-      System.gc()
-    }
     // post-query storage telemetry: cached bytes still pinned after
     // clearCache() reveal a leaked persist; total/free executor storage
     // memory contextualizes an anomalous timing (external memory
@@ -254,23 +282,7 @@ object Bench {
       val freeMb = st.map(_._2).sum / 1e6
       (math.round((maxMb - freeMb) * 10) / 10.0, math.round(freeMb * 10) / 10.0)
     }
-    // Per-query shuffle/spill telemetry ("measure, don't guess" for the
-    // plan dimension the wall clock hides): task-metric counters
-    // accumulated by a listener, snapshotted around each query's timed
-    // runs. A query whose time looks fine but whose shuffle bytes grew
-    // 10× is a scale regression the timing alone would miss at sf0.1.
-    val shufW = new AtomicLong; val shufR = new AtomicLong
-    val spill = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shufR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          spill.addAndGet(m.diskBytesSpilled + m.memoryBytesSpilled)
-        }
-      }
-    })
+    val meter = new Meter(spark)
     // Heap-mismatch warning (r10 verdict item 3): the driver's harness
     // launches this main with its own -Xmx (91 GiB observed in r10, vs
     // the tuned 8 GiB in build.sbt/run_main.sh), and big heaps measured
@@ -298,22 +310,7 @@ object Bench {
           "cpus setting (SURVEY §9k)")
     }
     heapWarn()
-    // one timed run with its own byte attribution: the listener bus is
-    // drained before the counter snapshot and again before the delta,
-    // so late task-end events can't attribute a neighbor run's bytes
-    def timedOnce(name: String): RunStat = {
-      clear()
-      org.apache.spark.sql.GraftBridge.flushListenerBus(spark)
-      val (w0, r0, sp0) = (shufW.get, shufR.get, spill.get)
-      val t0 = System.nanoTime()
-      run(name)
-      val sec = math.round((System.nanoTime() - t0) / 1e9 * 1000) / 1000.0
-      org.apache.spark.sql.GraftBridge.flushListenerBus(spark)
-      RunStat(sec,
-        math.round((shufW.get - w0) / 1e6 * 10) / 10.0,
-        math.round((shufR.get - r0) / 1e6 * 10) / 10.0,
-        math.round((spill.get - sp0) / 1e6 * 10) / 10.0)
-    }
+    def timedOnce(name: String): RunStat = meter.timed(run(name))
     // optional comma-separated subset (local iteration / extra scale
     // points — the driver sets only SPARK_GRAFT_SF_DIR)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -343,7 +340,7 @@ object Bench {
       val shufMb = mean(stats.map(_.shufWMb))
       val shufRdMb = mean(stats.map(_.shufRMb))
       val spillMb = mean(stats.map(_.spillMb))
-      clear()
+      meter.clear()
       val (usedMb, freeMb) = storageMb
       System.err.println(s"[bench] $name times=${times.mkString(",")} " +
         s"shuffle_write_mb=$shufMb shuffle_read_mb=$shufRdMb " +

@@ -1,54 +1,37 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Dev-only stage profiler: times named sub-plans of the expensive
-  * queries so a bench outlier can be attributed to a stage instead of
-  * guessed at. Not part of the driver contract.
+/** Dev-only profiler: times any registered query through Bench's timing
+  * path (untimed warm-up, then timed runs with cleared caches and
+  * per-run shuffle/spill bytes), plus three record probes whose JSON
+  * lines `tools/assemble_scale.py` embeds in the scale artifact. Not
+  * part of the driver contract.
   *
-  * Usage: sbt "runMain graft.Profile <sfDir> <queryName>"
+  * Usage: sbt "runMain graft.Profile <sfDir> <query | probe>"
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val what = args.drop(1).headOption.getOrElse("containment")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+    val what = args.drop(1).headOption.getOrElse("dedup_containment_lsh")
+    // shares /tmp/graft_warehouse (bucketed-table rewrites) with Verify
+    // and Bench, so it takes their lock
+    val guard = tools.RunGuard.acquire("graft.Profile")
+    val spark = Sessions.local()
+    val meter = new Bench.Meter(spark)
     what match {
-      case "quota_skew" => profileQuotaSkew(spark, sfDir)
+      case "quota_skew" => profileQuotaSkew(spark, meter, sfDir)
       case "incr_candidates" => profileIncrCandidates(spark, sfDir)
       case "containment_candidates" =>
         profileContainmentCandidates(spark, sfDir)
-      case "kneser" => profileKneser(spark, sfDir)
-      case "incr_minhash" => profileIncrMinhash(spark, sfDir)
-      case "containment" => profileContainment(spark, sfDir)
-      case "containment2" => profileContainment2(spark, sfDir)
-      case "containment3" => profileContainment3(spark, sfDir)
-      case "pagerank" => profilePageRank(spark, sfDir)
-      case "pagerank2" => profilePageRank2(spark, sfDir)
-      case "corr" => profileCorr(spark, sfDir)
-      case q => // bench-identical: untimed warm-up, median of 3, cache
-        // cleared between runs
+      case q =>
         def run(): Unit = SparkEntry.queries(q)(spark, sfDir).count()
         time(s"$q warm")(run())
-        val times = (1 to 3).map { i =>
-          spark.catalog.clearCache()
-          time(s"$q run$i") { run() }
-          0
-        }
-        ()
+        for (i <- 1 to 3) report(s"$q run$i", meter.timed(run()))
     }
     spark.stop()
+    guard.release()
   }
 
   private def time[T](label: String)(f: => T): T = {
@@ -58,6 +41,11 @@ object Profile {
     r
   }
 
+  private def report(label: String, st: Bench.RunStat): Unit =
+    println(f"[profile] $label%-40s ${st.sec}%8.3f s " +
+      s"shuffle_write_mb=${st.shufWMb} shuffle_read_mb=${st.shufRMb} " +
+      s"spill_mb=${st.spillMb}")
+
   /** Machine-readable probe record sink. DEDICATED env var — the skew
     * probe used to reuse Bench's SPARK_GRAFT_DETAIL_PATH, so a var
     * exported once for a bench chain silently truncated the bench
@@ -66,7 +54,7 @@ object Profile {
     * (r14 advice): two probes run in one chain with the var exported
     * once must both land in the record file — each record is one
     * newline-terminated JSON line. */
-  private def writeRecord(rec: String): Unit =
+  private def writeRecord(rec: String): Unit = {
     sys.env.get("SPARK_GRAFT_PROFILE_RECORD_PATH").foreach { p =>
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
         rec + "\n", java.nio.file.StandardOpenOption.CREATE,
@@ -74,183 +62,7 @@ object Profile {
       catch { case e: Throwable =>
         System.err.println(s"[profile] record write failed: ${e.getMessage}") }
     }
-
-  /** Per-iteration breakdown of graph_pagerank at the CURRENT query
-    * shape (long node ids, contribution broadcast under the node cap),
-    * parameterized by env so checkpoint cadence / broadcast choice can
-    * be A/B'd without recompiling:
-    *   SPARK_GRAFT_PR_CKPT_EVERY (default 4) — localCheckpoint cadence
-    *   SPARK_GRAFT_PR_BROADCAST (default true) — broadcast(contrib)?
-    * Run 3× so slow-mode runs (the 32-core bimodality under
-    * investigation) land inside the instrumented window. */
-  private def profilePageRank2(s: SparkSession, dir: String): Unit = {
-    import graft.ops.Graph
-    val every = sys.env.getOrElse("SPARK_GRAFT_PR_CKPT_EVERY", "4").toInt
-    val useB = sys.env.getOrElse("SPARK_GRAFT_PR_BROADCAST", "true").toBoolean
-    sys.env.get("SPARK_GRAFT_PR_AQE")
-      .foreach(v => s.conf.set("spark.sql.adaptive.enabled", v))
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    for (r <- 1 to 3) {
-      val t0 = System.nanoTime()
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-        .select(col("l_suppkey").as("sa"), col("l_partkey").as("pa"))
-        .distinct()
-        .select((col("sa") * 2).as("a"), (col("pa") * 2 + 1).as("b"))
-      val edges = li.select(explode(array(
-          struct(col("a").as("src"), col("b").as("dst")),
-          struct(col("b").as("src"), col("a").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      val e0 = edges.persist(lvl)
-      val deg = e0.groupBy("src").agg(count(lit(1)).as("deg"))
-      val n = time(s"r$r deg persist+count")(deg.persist(lvl).count())
-      val m = time(s"r$r edge count")(e0.count())
-      val parts = math.max(4, math.min(64, (m / 120000L).toInt))
-      val ed = e0.coalesce(parts).persist(lvl)
-      time(s"r$r ed coalesce($parts)+count")(ed.count())
-      e0.unpersist(blocking = false)
-      val teleport = 0.15 / n
-      import org.apache.spark.sql.types._
-      val carryDeg = sys.env.get("SPARK_GRAFT_PR_CARRYDEG").contains("true")
-      if (carryDeg) {
-        var ranks = deg.select(col("src").as("node"),
-          round(lit(1.0 / n), 12).as("rank"), col("deg"))
-        for (i <- 1 to 10) {
-          val contrib = ranks.select(col("node"),
-            (col("rank") / col("deg")).cast(DecimalType(18, 12))
-              .as("contrib"))
-          val rr = if (useB) broadcast(contrib) else contrib
-          val next = ed.join(rr, ed("src") === rr("node"))
-            .groupBy(col("dst"))
-            .agg((lit(teleport) + lit(0.85) *
-              sum(col("contrib")).cast(DoubleType)).as("rr"))
-            .select(col("dst").as("node"), round(col("rr"), 12).as("rank"))
-            .join(broadcast(deg), col("node") === deg("src"))
-            .select(col("node"), col("rank"), col("deg"))
-          ranks = if (i % every == 0 || i == 10)
-            time(s"r$r iter $i ckpt")(next.localCheckpoint())
-          else next
-        }
-        time(s"r$r final count")(ranks.count())
-      } else {
-      var ranks = deg.select(col("src").as("node"),
-        round(lit(1.0 / n), 12).as("rank"))
-      for (i <- 1 to 10) {
-        val contrib = ranks.join(deg, ranks("node") === deg("src"))
-          .select(col("node"),
-            (col("rank") / col("deg")).cast(DecimalType(18, 12))
-              .as("contrib"))
-        val rr = if (useB) broadcast(contrib) else contrib
-        val next = ed.join(rr, ed("src") === rr("node"))
-          .groupBy(col("dst"))
-          .agg((lit(teleport) + lit(0.85) *
-            sum(col("contrib")).cast(DoubleType)).as("rr"))
-          .select(col("dst").as("node"), round(col("rr"), 12).as("rank"))
-        ranks = if (i % every == 0 || i == 10)
-          time(s"r$r iter $i ckpt")(next.localCheckpoint())
-        else next
-      }
-      time(s"r$r final count")(ranks.count())
-      }
-      ed.unpersist(blocking = false)
-      deg.unpersist(blocking = false)
-      println(f"[profile] r$r TOTAL ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-      s.catalog.clearCache()
-      s.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
-  }
-
-  /** Cost attribution for q_corr_matrix: the query is ONE agg pass over
-    * lineitem (4 dsum + 4 dsum-of-squares + 6 dsum cross-products +
-    * count). Times the scan alone, a plain-double agg, and the decimal
-    * (dsum) agg, to see whether the wall is I/O, agg machinery, or the
-    * DECIMAL(28,6) accumulator arithmetic. */
-  private def profileCorr(s: SparkSession, dir: String): Unit = {
-    import graft.ops.Q.dsum
-    val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-    val li = s.read.parquet(s"$dir/lineitem.parquet")
-      .select(cols.map(col): _*)
-    for (r <- 1 to 3) {
-      time(s"r$r scan count")(li.count())
-      time(s"r$r scan noop") {
-        li.write.format("noop").mode("overwrite").save()
-      }
-      val dAggs =
-        cols.map(c => sum(col(c)).as(s"s_$c")) ++
-        cols.map(c => sum(col(c) * col(c)).as(s"ss_$c")) ++
-        (for { i <- cols.indices; j <- cols.indices if i < j }
-          yield sum(col(cols(i)) * col(cols(j))).as(s"sp_$i$j"))
-      time(s"r$r double agg")(li.agg(count(lit(1)), dAggs: _*).collect())
-      val cAggs =
-        cols.map(c => dsum(col(c)).as(s"s_$c")) ++
-        cols.map(c => dsum(col(c) * col(c)).as(s"ss_$c")) ++
-        (for { i <- cols.indices; j <- cols.indices if i < j }
-          yield dsum(col(cols(i)) * col(cols(j))).as(s"sp_$i$j"))
-      time(s"r$r decimal agg")(li.agg(count(lit(1)), cAggs: _*).collect())
-      time(s"r$r full query")(
-        SparkEntry.queries("q_corr_matrix")(s, dir).count())
-    }
-  }
-
-  /** Per-leg breakdown of dedup_incr_minhash: shingle derivation,
-    * signature/band builds, candidate join, verify. */
-  private def profileIncrMinhash(s: SparkSession, dir: String): Unit = {
-    import graft.ops.{Dedup, Incremental, Text}
-    def sets(base: Boolean) = {
-      val md = substring(md5(col("doc_id").cast("string")), 1, 1) < "d"
-      s.read.parquet(s"$dir/documents.parquet")
-        .filter(if (base) md else !md)
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(col("doc_id").as("id"),
-          array_distinct(Text.charShingles(col("text"), 5)).as("sh"))
-    }
-    val batch = sets(base = false); val base = sets(base = true)
-    time("batch sets count")(batch.count())
-    time("base sets count")(base.count())
-    time("base signatures")(Dedup.minhashSignatures(base).count())
-    val idx = Incremental.bandIndex(base)
-    time("base band index")(idx.count())
-    val probes = Incremental.bandIndex(batch).withColumnRenamed("id", "id_batch")
-    val cands = probes.join(idx, Seq("band", "bkey"))
-      .select(col("id_batch"), col("id").as("id_base")).distinct()
-    time("candidates distinct")(println("  cands=" + cands.count()))
-    time("full nearDupAgainstIndex")(
-      Incremental.nearDupAgainstIndex(batch, base, 0.5).count())
-    // hypothesis probe: are the wide shingle-set broadcasts the cost?
-    val thr = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    time("full, broadcasts disabled")(
-      Incremental.nearDupAgainstIndex(batch, base, 0.5).count())
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-  }
-
-  /** Per-leg breakdown of text_kneser_ney (r13 ask 7: its 10×/3× wall
-    * ratio drifted 2.72 → 4.2 across rounds at byte-stable counters):
-    * times each count-table build and the final join separately and
-    * prints the table cardinalities, so "which leg grew" is a record
-    * instead of a guess. */
-  private def profileKneser(s: SparkSession, dir: String): Unit = {
-    import graft.ops.Text
-    val pairs = s.read.parquet(s"$dir/documents.parquet")
-      .withColumn("toks", Text.tokens(col("text")))
-      .filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), explode(zip_with(
-        slice(col("toks"), lit(1), size(col("toks")) - 1),
-        slice(col("toks"), lit(2), size(col("toks")) - 1),
-        (a, b) => struct(a.as("w1"), b.as("w2")))).as("p"))
-      .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-    val nPairs = time("pairs explode+count")(pairs.count())
-    val bigramCnt = pairs.groupBy(col("w1"), col("w2"))
-      .agg(count(lit(1)).as("n_bigram"))
-    val nTypes = time("bigramCnt build")(bigramCnt.count())
-    val nCtx = time("contextCnt build")(
-      pairs.groupBy(col("w1")).agg(count(lit(1))).count())
-    val n1fN = time("n1f build")(
-      bigramCnt.groupBy(col("w1")).agg(count(lit(1))).count())
-    println(s"[profile] kneser pairs=$nPairs bigram_types=$nTypes " +
-      s"contexts=$nCtx n1f=$n1fN")
-    time("full registered query")(
-      SparkEntry.queries("text_kneser_ney")(s, dir).count())
+    println(rec)
   }
 
   /** Candidate-volume probe of the adaptive-width embedding band join
@@ -263,13 +75,11 @@ object Profile {
     val r = time("incr_candidates")(Incremental.incrCandidateStats(
       Incremental.vecSets(s, dir, base = false),
       Incremental.vecSets(s, dir, base = true)).head())
-    val rec = s"""{"probe":"incr_candidates","dir":"$dir"""" +
+    writeRecord(s"""{"probe":"incr_candidates","dir":"$dir"""" +
       s""","bits_low":${r.getInt(0)},"k_high":${r.getInt(1)}""" +
       s""","n_batch":${r.getLong(2)},"n_base":${r.getLong(3)}""" +
       s""","n_candidates":${r.getLong(4)}""" +
-      s""","cand_per_batch_row":${r.getDouble(5)}}"""
-    writeRecord(rec)
-    println(rec)
+      s""","cand_per_batch_row":${r.getDouble(5)}}""")
   }
 
   /** Candidate-volume probe of the containment prefix filter (r14
@@ -285,13 +95,11 @@ object Profile {
       .select(col("doc_id"), Text.charShingleHashes(col("text"), 5).as("sh"))
     val r = time("containment_candidates")(
       Dedup.containmentCandidateStats(docs, "doc_id", "sh", 0.8).head())
-    val rec = s"""{"probe":"containment_candidates","dir":"$dir"""" +
+    writeRecord(s"""{"probe":"containment_candidates","dir":"$dir"""" +
       s""","n_docs":${r.getLong(0)},"posting_volume":${r.getLong(1)}""" +
       s""","n_instances":${r.getLong(2)},"n_candidates":${r.getLong(3)}""" +
       s""","n_pairs":${r.getLong(4)},"inst_per_doc":${r.getDouble(5)}""" +
-      s""","cand_per_doc":${r.getDouble(6)}}"""
-    writeRecord(rec)
-    println(rec)
+      s""","cand_per_doc":${r.getDouble(6)}}""")
   }
 
   /** Mega-host probe for the eTLD+1 quota: runs
@@ -303,16 +111,8 @@ object Profile {
     * at most k rows per key, so the exchange carries O(k·maps) rows no
     * matter how skewed the corpus; without it, the full mega-group
     * crosses the wire into a single reducer. */
-  private def profileQuotaSkew(s: SparkSession, dir: String): Unit = {
-    val shufW = new java.util.concurrent.atomic.AtomicLong
-    s.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null) shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      })
+  private def profileQuotaSkew(s: SparkSession, meter: Bench.Meter,
+      dir: String): Unit = {
     def run(): Long =
       SparkEntry.queries("pipeline_domain_quota_etld")(s, dir).count()
     val wgl = "org.apache.spark.sql.catalyst.optimizer.InferWindowGroupLimit"
@@ -327,167 +127,16 @@ object Profile {
         val rows = time(s"$label warm")(run())
         println(s"[profile] $label output_rows $rows")
         val stats = (1 to 3).map { i =>
-          s.catalog.clearCache()
-          org.apache.spark.sql.GraftBridge.flushListenerBus(s)
-          val b0 = shufW.get
-          val t0 = System.nanoTime()
-          time(s"$label run$i")(run())
-          val sec = math.round((System.nanoTime() - t0) / 1e9 * 1000) / 1000.0
-          org.apache.spark.sql.GraftBridge.flushListenerBus(s)
-          val mb = math.round((shufW.get - b0) / 1e6 * 10) / 10.0
-          println(f"[profile] $label run$i shuffle_write_mb $mb%.1f")
-          (sec, mb)
-        }.toVector
-        val secMed = stats.map(_._1).sorted.apply(1)
-        val mbMed = stats.map(_._2).sorted.apply(1)
+          val st = meter.timed(run())
+          report(s"$label run$i", st)
+          st
+        }
+        val secMed = stats.map(_.sec).sorted.apply(1)
+        val mbMed = stats.map(_.shufWMb).sorted.apply(1)
         s""""$label":{"sec_median":$secMed,"shuffle_write_mb_median":$mbMed,"output_rows":$rows,"runs":3}"""
     }
     s.conf.set("spark.sql.optimizer.excludedRules", "")
-    val rec = s"""{"probe":"quota_skew","dir":"$dir",${legs.mkString(",")}}"""
-    writeRecord(rec)
-    println(rec)
-  }
-
-  private def profilePageRank(s: SparkSession, dir: String): Unit = {
-    import graft.ops.Graph
-    val li = s.read.parquet(s"$dir/lineitem.parquet")
-      .select(concat(lit("S"), col("l_suppkey")).as("a"),
-        concat(lit("P"), col("l_partkey")).as("b"))
-      .distinct()
-    val edges = li.select(col("a").as("src"), col("b").as("dst"))
-      .union(li.select(col("b").as("src"), col("a").as("dst")))
-    import org.apache.spark.sql.types._
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    time("li distinct")(li.count())
-    time("edges count")(edges.count())
-    val e0 = edges.persist(lvl)
-    time("e0 persist+count")(e0.count())
-    val deg = e0.groupBy("src").agg(count(lit(1)).as("deg")).persist(lvl)
-    val n = time("deg count")(deg.count())
-    val ed = e0.join(deg, "src").select(col("src"), col("dst"), col("deg"))
-      .coalesce(8)
-      .persist(lvl)
-    time("ed persist+count")(ed.count())
-    var ranks = deg.select(col("src").as("node"),
-      round(lit(1.0 / n), 12).as("rank"))
-    for (i <- 1 to 10) {
-      val next = ed.join(broadcast(ranks), ed("src") === ranks("node"))
-        .groupBy(col("dst"))
-        .agg((lit(0.15 / n) + lit(0.85) *
-          sum((col("rank") / col("deg")).cast(DecimalType(18, 12)))
-            .cast(DoubleType)).as("rr"))
-        .select(col("dst").as("node"), round(col("rr"), 12).as("rank"))
-      ranks = time(s"iter $i (checkpoint)")(next.localCheckpoint())
-    }
-    time("final count")(ranks.count())
-  }
-
-  /** Stage timing of the REGISTERED containment path (fused
-    * CharShingleHashes input). */
-  private def profileContainment3(s: SparkSession, dir: String): Unit = {
-    import graft.ops.{Dedup, Text}
-    val docs = s.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), Text.charShingleHashes(col("text"), 5).as("sh"))
-    time("fused shingle-hash scan")(docs.count())
-    val raw = docs.select(col("doc_id").as("id"), col("sh").as("h0"))
-    val toks = raw.select(col("id"), explode(col("h0")).as("tok"))
-    time("toks explode")(toks.count())
-    val dfreq = toks.groupBy("tok").agg(count(lit(1)).as("df"))
-    time("dfreq")(dfreq.count())
-    val sets = toks.join(dfreq, "tok")
-      .groupBy("id")
-      .agg(sort_array(collect_list(struct(col("df"), col("tok")))).as("st"))
-      .select(col("id"),
-        transform(col("st"), x => x.getField("tok")).as("hs"))
-      .persist()
-    time("sets build+persist")(sets.count())
-    val postings = sets
-      .select(col("id").as("id_b"), explode(col("hs")).as("tok"))
-      .groupBy("tok").agg(collect_list(col("id_b")).as("ids"))
-      .filter(size(col("ids")) <= Dedup.MaxBucket)
-    time("posting volume probe")(
-      println("  vol=" + postings.agg(sum(size(col("ids")))).head.get(0)))
-    time("postings collect")(
-      println("  rows=" + postings.select(col("tok"), col("ids")).count()))
-    sets.unpersist()
-    val t0 = System.nanoTime()
-    val full = Dedup.containmentPairs(docs, "doc_id", "sh", 0.8)
-    println("  full-count=" + full.count())
-    println(f"[profile] full containmentPairs ${(System.nanoTime()-t0)/1e9}%8.3f s")
-  }
-
-  private def profileContainment2(s: SparkSession, dir: String): Unit = {
-    import graft.ops.{Dedup, Text}
-    val docs = s.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), Text.charShingles(col("text"), 5).as("sh"))
-    time("shingles scan")(docs.count())
-    val raw = docs.select(col("doc_id").as("id"),
-      array_distinct(transform(col("sh"), x => xxhash64(x))).as("h0"))
-    val toks = raw.select(col("id"), explode(col("h0")).as("tok"))
-    val dfreq = toks.groupBy("tok").agg(count(lit(1)).as("df"))
-    val sets = toks.join(dfreq, "tok")
-      .groupBy("id")
-      .agg(sort_array(collect_list(struct(col("df"), col("tok")))).as("st"))
-      .select(col("id"),
-        transform(col("st"), x => x.getField("tok")).as("hs"))
-      .persist()
-    time("sets build+persist")(sets.count())
-    val postings = sets
-      .select(col("id").as("id_b"), explode(col("hs")).as("tok"))
-      .groupBy("tok").agg(collect_list(col("id_b")).as("ids"))
-      .filter(size(col("ids")) <= Dedup.MaxBucket)
-    time("posting volume probe")(
-      println("  vol=" + postings.agg(sum(size(col("ids")))).head.get(0)))
-    val collected = time("postings collect")(
-      postings.select(col("tok"), col("ids")).collect())
-    println("  postings rows=" + collected.length)
-    val cands = time("full containmentPairs")(
-      Dedup.containmentPairs(docs, "doc_id", "sh", 0.8))
-    time("cands count")(println("  cands=" + cands.count()))
-    sets.unpersist()
-  }
-
-  private def profileContainment(s: SparkSession, dir: String): Unit = {
-    import graft.ops.{Dedup, Text}
-    val docs = s.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), Text.charShingles(col("text"), 5).as("sh"))
-    val raw = docs.select(col("doc_id").as("id"),
-      array_distinct(transform(col("sh"), x => xxhash64(x))).as("h0"))
-    val toks = raw.select(col("id"), explode(col("h0")).as("tok"))
-    time("toks explode")(toks.count())
-    val dfreq = toks.groupBy("tok").agg(count(lit(1)).as("df"))
-    time("dfreq distinct toks")(println("  distinct=" + dfreq.count()))
-    val sets = toks.join(dfreq, "tok")
-      .groupBy("id")
-      .agg(sort_array(collect_list(struct(col("df"), col("tok")))).as("st"))
-      .select(col("id"),
-        transform(col("st"), x => x.getField("tok")).as("hs"))
-      .persist()
-    time("sets build+persist")(sets.count())
-    val sz = size(col("hs"))
-    val threshold = 0.8
-    val missMax = (sz - ceil(sz * threshold))
-      .cast(org.apache.spark.sql.types.IntegerType)
-    val prefLen = least(sz, missMax * 2 + 1)
-      .cast(org.apache.spark.sql.types.IntegerType)
-    val pref = sets.select(col("id").as("id_a"), missMax.as("mm"),
-      prefLen.as("m"), explode(slice(col("hs"), lit(1), prefLen)).as("tok"))
-    time("pref rows")(println("  pref=" + pref.count()))
-    val postings = sets
-      .select(col("id").as("id_b"), explode(col("hs")).as("tok"))
-      .groupBy("tok").agg(collect_list(col("id_b")).as("ids"))
-      .filter(size(col("ids")) <= Dedup.MaxBucket)
-    time("postings")(println("  postings=" + postings.count()))
-    val joined = pref.join(postings, "tok")
-      .select(col("id_a"), col("mm"), col("m"), explode(col("ids")).as("id_b"))
-      .filter(col("id_a") =!= col("id_b"))
-    time("join+explode volume")(println("  joined=" + joined.count()))
-    val counted = joined
-      .groupBy(col("id_a"), col("id_b"), col("mm"), col("m"))
-      .agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") >= col("m") - col("mm"))
-      .select(col("id_a"), col("id_b"))
-    time("counted candidates")(println("  cands=" + counted.count()))
-    sets.unpersist()
+    writeRecord(
+      s"""{"probe":"quota_skew","dir":"$dir",${legs.mkString(",")}}""")
   }
 }

@@ -7,6 +7,20 @@ import org.apache.spark.sql.SparkSession
 
 /** Small shared utilities. */
 object Util {
+  /** `s` as a quoted JSON string literal: escapes quote, backslash and
+    * every control character below 0x20 (a raw tab or newline makes
+    * strict parsers reject the document). */
+  def jsonString(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
   /** Recursive delete of a LOCAL temp dir (shared by Verify's
     * stale-output cleanup, the bucketed-table location reset, and the
     * replay queries' `Files.createTempDirectory` scratch dirs — all

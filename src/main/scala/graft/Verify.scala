@@ -1,6 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
+
+import Util.jsonString
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -15,17 +18,7 @@ object Verify {
     // background chain raced this main's output dir and flipped 5
     // hashes while rows/schema matched). Held for the whole run.
     val guard = tools.RunGuard.acquire("graft.Verify")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     // Write the oracle map BEFORE running any query: round 6's record
     // came back as an empty {} because this main previously wrote
@@ -39,7 +32,7 @@ object Verify {
     // process wrote into this outDir while we ran (the round-8 clobber
     // mode), the stamp mismatch turns a silent artifact corruption into
     // a loud nonzero exit.
-    val stamp = s"""{"main":"graft.Verify","sf_dir":${q(sfDir)},""" +
+    val stamp = s"""{"main":"graft.Verify","sf_dir":${jsonString(sfDir)},""" +
       guard.metaJson + "}"
     val stampPath = Paths.get(s"$outDir/run_meta.json")
     Files.writeString(stampPath, stamp)
@@ -71,22 +64,10 @@ object Verify {
     }
   }
 
-  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-  // — a tab or CR in builder-authored SQL would otherwise make the
-  // driver's json.load fail and silently zero the round's correctness.
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   private def writeOracles(outDir: String): Unit = {
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
   }
 }

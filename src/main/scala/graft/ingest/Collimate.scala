@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Util.jsonString
+
 /** Ingest orchestration (reference O1–O3, O11, O13–O15,
   * `index.js:525-643`): read CSV/TSV/JSON → infer schema → cast →
   * columnar (Parquet) sink + optional index sidecar.
@@ -76,14 +78,13 @@ object Collimate {
   def write(result: Result, outDir: String, opts: Options = Options()): Unit = {
     result.df.write.mode("overwrite").parquet(s"$outDir/data.parquet")
     if (opts.writeIndex) {
-      def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
       val entries = result.schema.fields.map { f =>
-        s"${q(f.name)}: {" +
-          s"${q("column")}: ${q(f.sanitized)}, " +
-          s"${q("type")}: ${q(f.dataType.simpleString)}, " +
-          s"${q("categorical")}: ${f.categorical}" +
-          f.dateFormat.map(fm => s", ${q("date_format")}: ${q(fm)}").getOrElse("") +
-        "}"
+        s"""${jsonString(f.name)}: {"column": ${jsonString(f.sanitized)}, """ +
+          s""""type": ${jsonString(f.dataType.simpleString)}, """ +
+          s""""categorical": ${f.categorical}""" +
+          f.dateFormat.map(fm => s""", "date_format": ${jsonString(fm)}""")
+            .getOrElse("") +
+          "}"
       }
       Files.createDirectories(Paths.get(outDir))
       Files.writeString(Paths.get(s"$outDir/index.json"),
@@ -103,17 +104,8 @@ object CollimateCli {
     val in = rest(0)
     val base = in.replaceAll("\\.[^.]+$", "")
     val out = if (rest.length > 1) rest(1) else base
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the CLI's jobs are a bounded inference agg + one write — the
-      // 200-partition default just multiplies task-launch overhead on
-      // a single node (on a cluster, submit with an explicit setting)
-      .config("spark.sql.shuffle.partitions",
-        math.max(1, Runtime.getRuntime.availableProcessors()).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(
+      sys.env.getOrElse("SPARK_MASTER", "local[*]"))
     val opts = Collimate.Options(
       parseDates = flags("-d"), writeIndex = flags("-i"),
       multiLine = flags("-m"))

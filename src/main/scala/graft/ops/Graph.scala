@@ -162,11 +162,6 @@ object Graph {
             sum(col("contrib")).cast(DoubleType)).as("rr"))
           .select(col("dst").as("node"), round(col("rr"), 12).as("rank"))
       }
-      // plan-evidence hook (measurement only): dump ONE iteration's
-      // physical plan — the final checkpointed frame's plan proves
-      // nothing about the iteration shape (r15 verdict lesson)
-      if (i == 2 && sys.env.contains("SPARK_GRAFT_EXPLAIN_ITER"))
-        next.explain("formatted")
       // lineage truncation every 4th round keeps the analyzed plan
       // bounded without paying a materialization per iteration
       ranks = if (i % 4 == 0 || i == iterations) next.localCheckpoint()
@@ -488,9 +483,6 @@ object Graph {
         .select(col("src"))
       val next = e.join(maybeB(keep), Seq("src"))
         .join(maybeB(keep.withColumnRenamed("src", "dst")), Seq("dst"))
-      // plan-evidence hook (measurement only): one peel round's plan
-      if (r == 2 && sys.env.contains("SPARK_GRAFT_EXPLAIN_ITER"))
-        next.explain("formatted")
       val ckpt = next.localCheckpoint()
       GraftBridge.unpersistCheckpoint(e)
       e = ckpt

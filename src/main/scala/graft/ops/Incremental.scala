@@ -175,13 +175,6 @@ object Incremental {
     merged.localCheckpoint().write.mode("overwrite").parquet(stateDir)
   }
 
-  /** Streaming wrapper: maintain the sketch state table per microbatch. */
-  def sketchRollupStream(stream: DataFrame, keyCol: String,
-      itemCol: String, stateDir: String) =
-    stream.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-      processSketchBatch(b, keyCol, itemCol, stateDir)
-    }
-
   /** CDC delete marker: an event of this type tombstones its key (the
     * synthetic stream has no op-code column; 'error' plays DELETE, the
     * other four types are upserts — the mapping is arbitrary and the
@@ -254,12 +247,6 @@ object Incremental {
     merged.localCheckpoint().write.mode("overwrite").parquet(stateDir)
   }
 
-  /** Streaming wrapper: apply CDC batches to the state table. */
-  def cdcStream(stream: DataFrame, stateDir: String) =
-    stream.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-      processCdcBatch(b, stateDir)
-    }
-
   /** Incremental Holt (level, trend) state maintenance — the streaming
     * form of `events_holt_hourly`: each microbatch's per-(type, hour)
     * counts are folded INTO the persisted two-field state instead of
@@ -318,12 +305,6 @@ object Incremental {
         col("st.l").as("level"), col("st.b").as("trend"))
     merged.localCheckpoint().write.mode("overwrite").parquet(stateDir)
   }
-
-  /** Streaming wrapper: maintain the Holt state per microbatch. */
-  def holtStream(stream: DataFrame, stateDir: String) =
-    stream.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-      processHoltBatch(b, stateDir)
-    }
 
   /** LshBuckets band index over base-corpus EMBEDDINGS: (tb, bk, id) —
     * the persisted semantic-dedup analogue of [[bandIndex]]. In

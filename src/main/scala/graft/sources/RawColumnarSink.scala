@@ -9,6 +9,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
+import graft.Util.jsonString
 import graft.ingest.Collimate
 
 /** Reference-format binary columnar export (O13/O14,
@@ -39,17 +40,6 @@ object RawColumnarSink {
     ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN).putInt(n).array()
   private def leF(f: Float): Array[Byte] =
     ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN).putFloat(f).array()
-
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   /** Streams `result.df` in its current row order (= file order when
     * the input was a single file read) and writes the per-column files.
@@ -88,7 +78,7 @@ object RawColumnarSink {
         first = false
         val s =
           if (v == null) "null"
-          else if (quoted) jsonStr(v.toString)
+          else if (quoted) jsonString(v.toString)
           else v.toString
         os.write(s.getBytes("UTF-8"))
       }
@@ -125,7 +115,7 @@ object RawColumnarSink {
             if (!first) os.write(",\n ".getBytes)
             first = false
             val d = decoder(c)
-            val s = if (d == "null") "null" else if (quoted) jsonStr(d) else d
+            val s = if (d == "null") "null" else if (quoted) jsonString(d) else d
             os.write(s.getBytes("UTF-8"))
           }
           os.write("]\n".getBytes)
@@ -138,7 +128,7 @@ object RawColumnarSink {
         os.close()
         val key = out(name, ext + ".key")
         key.write(("[" + decoder.map(d =>
-          if (quoted) jsonStr(d) else d).mkString(",\n ") + "]\n").getBytes("UTF-8"))
+          if (quoted) jsonString(d) else d).mkString(",\n ") + "]\n").getBytes("UTF-8"))
         key.close()
       }
     }
@@ -164,7 +154,7 @@ object RawColumnarSink {
       f.name -> (f.sanitized + s.ext)
     }.toMap
     val body = "{" + fields.zip(sinks).map { case (f, s) =>
-      jsonStr(f.name) + " : " + jsonStr(f.sanitized + s.ext)
+      jsonString(f.name) + " : " + jsonString(f.sanitized + s.ext)
     }.mkString(",\n ") + "}\n"
     Files.writeString(Paths.get(s"$outDir/index.json"), body)
     index

@@ -49,8 +49,7 @@ final class RunGuard private (
   /** One-line JSON fragment (no braces) for embedding in artifact
     * JSON: `"pid":…,"started_at_ms":…,"lock_contended":…,…`. */
   def metaJson: String = {
-    val others = otherGraftJvms.map(s => "\"" +
-      s.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
+    val others = otherGraftJvms.map(graft.Util.jsonString)
       .mkString("[", ",", "]")
     // JVM sizing stamp: the r9 driver bench ran the vector-heavy block
     // 3–7× slower than the committed record with tight spreads and no

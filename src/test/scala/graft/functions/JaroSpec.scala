@@ -1,21 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Known-answer + edge cases for JaroWinkler, pinned to DuckDB's
   * jaro_winkler_similarity (the oracle engine) — including the
   * empirically-probed semantics: empty→0, window max/2−1 (no floor
   * clamp above 0), integer-halved transpositions, bonus only above
   * jaro 0.7. */
-class JaroSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse_test")
-    .getOrCreate()
-
+class JaroSpec extends AnyFunSuite with SparkSuite {
   private def jw(a: String, b: String): Double = JaroWinkler.compute(a, b)
 
   test("known values match DuckDB jaro_winkler_similarity") {

@@ -1,17 +1,11 @@
 package graft.ingest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-class IngestSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+import graft.SparkSuite
 
+class IngestSpec extends AnyFunSuite with SparkSuite {
   def fixture(name: String): String =
     getClass.getResource(s"/$name").getPath
 
@@ -422,14 +416,28 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("roundtrip: write parquet + index sidecar (O13/O14)") {
-    val out = java.nio.file.Files.createTempDirectory("collimate_test").toString
-    val r = Collimate(spark, fixture("types_basic.csv"))
-    Collimate.write(r, out, Collimate.Options(writeIndex = true))
-    val back = spark.read.parquet(s"$out/data.parquet")
-    assert(back.schema == r.df.schema)
-    assert(back.count() == 4)
-    val idx = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$out/index.json")))
-    assert(idx.contains("\"id\"") && idx.contains("\"int\""))
+    import org.json4s._
+    val tmp = java.nio.file.Files.createTempDirectory("collimate_test")
+    // a quoted header holding a tab: index.json must escape it
+    val tabbed = tmp.resolve("tabbed.csv")
+    java.nio.file.Files.writeString(tabbed, "\"a\tb\",c\n1,x\n2,y\n")
+    def roundtrip(in: String, rows: Long): JValue = {
+      val out = tmp.resolve(s"out_${rows}").toString
+      val r = Collimate(spark, in)
+      Collimate.write(r, out, Collimate.Options(writeIndex = true))
+      val back = spark.read.parquet(s"$out/data.parquet")
+      assert(back.schema == r.df.schema)
+      assert(back.count() == rows)
+      val idx = org.json4s.jackson.JsonMethods.parse(new String(
+        java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(s"$out/index.json")), "UTF-8"))
+      assert(idx.asInstanceOf[JObject].obj.map(_._1) ==
+        r.schema.fields.map(_.name).toList)
+      idx
+    }
+    assert(roundtrip(fixture("types_basic.csv"), 4) \ "id" \ "type" ==
+      JString("int"))
+    assert((roundtrip(tabbed.toString, 2) \ "a\tb" \ "column")
+      .isInstanceOf[JString])
   }
 }

@@ -1,20 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.functions.Vectors
 
-class OpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse_test")
-    .getOrCreate()
+class OpsSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   test("cosine / dot / l2 match hand-computed values") {

@@ -1,10 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkEntry
+import graft.SparkSuite
 
 /** Plan-shape assertions: the properties that make each operator hold
   * at 100 TB are locked in here, so a regression that silently
@@ -12,16 +13,7 @@ import graft.SparkEntry
   * dropping partial aggregation) fails CI even though results stay
   * correct.
   */
-class PlanSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse_test")
-    .getOrCreate()
-
+class PlanSpec extends AnyFunSuite with SparkSuite {
   val dir = "/root/testdata/sf0.001"
 
   private def formatted(df: DataFrame): String =

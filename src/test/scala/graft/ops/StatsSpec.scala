@@ -1,22 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Property checks for the experimentation/statistics surface (the
   * oracle gate proves cross-engine equality; these prove the STATISTICS
   * are right — known-answer identities a wrong formula can't fake). */
-class StatsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse_test")
-    .getOrCreate()
-
+class StatsSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("welch t: identical arms give t = 0; known two-sample case matches R") {

@@ -1,21 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Specs for the warehouse-modeling operators (Warehouse.scala) and the
   * z-order layout op (Scale.scala), run on the driver's sf0.001 tables.
   */
-class WarehouseSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse_test")
-    .getOrCreate()
-
+class WarehouseSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("scd2: per customer, intervals chain and exactly one is current") {

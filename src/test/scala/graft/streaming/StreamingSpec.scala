@@ -2,11 +2,12 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
     event_type: String, value: Double)
@@ -18,13 +19,7 @@ case class Vec(id: Long, v: Seq[Double], nrm: Double)
 /** Structured Streaming parity: the SAME hourlyAgg transform that the
   * batch oracle checks is run here as a real streaming query (memory
   * sink), plus a stateful mapGroupsWithState op. */
-class StreamingSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   def ts(m: Int): Timestamp = Timestamp.valueOf(f"2024-01-01 ${m / 60}%02d:${m % 60}%02d:00")
