@@ -50,7 +50,7 @@ object Bench {
     // repeated-window detection + per-doc span merge)
     "dedup_substring_spans",
     // round-7: mergeable KLL quantile-sketch rollup (the percentile
-    // analogue of the HLL rollup — custom TypedImperativeAggregate),
+    // analogue of the HLL rollup, on Spark's built-in KLL aggregates),
     // perceptual-hash band dedup (lossless Hamming band join), and
     // k-core peeling over LSH pairs (the iterative-graph scale form)
     "q_kll_rollup", "mm_phash_dedup", "graph_kcore_ann",

@@ -97,6 +97,13 @@ object Collimate {
   * [outDir]` — flags match the reference's yargs surface. */
 object CollimateCli {
   def main(args: Array[String]): Unit = {
+    val spark = graft.Sessions.local(
+      sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+    try run(spark, args) finally spark.stop()
+  }
+
+  /** The CLI body on a caller's session: parse the flags, ingest, write. */
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val flags = args.filter(_.startsWith("-")).toSet
     val rest = args.filterNot(_.startsWith("-"))
     // -r: also write the reference-format raw binary columns (interop)
@@ -104,8 +111,6 @@ object CollimateCli {
     val in = rest(0)
     val base = in.replaceAll("\\.[^.]+$", "")
     val out = if (rest.length > 1) rest(1) else base
-    val spark = graft.Sessions.local(
-      sys.env.getOrElse("SPARK_MASTER", "local[*]"))
     val opts = Collimate.Options(
       parseDates = flags("-d"), writeIndex = flags("-i"),
       multiLine = flags("-m"))
@@ -118,7 +123,7 @@ object CollimateCli {
         val a = body
         println(s"done! (${(System.nanoTime() - t0) / 1000000} ms)"); a
       }
-    val raw = timed("Parsing input")(Collimate.read(spark, in))
+    val raw = timed("Parsing input")(Collimate.read(spark, in, opts.multiLine))
     val result = timed("Determining types + creating columns")(
       Collimate.fromRows(raw, opts))
     timed("Writing files")(Collimate.write(result, out, opts))
@@ -129,6 +134,5 @@ object CollimateCli {
       println(s"${f.name} -> ${f.sanitized}: ${f.dataType.simpleString}" +
         (if (f.categorical) " (categorical)" else ""))
     }
-    spark.stop()
   }
 }

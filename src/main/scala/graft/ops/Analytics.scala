@@ -133,34 +133,24 @@ object Analytics {
             .as("approx_users"))
         .orderBy(col("event_type"))
     },
-    // mergeable QUANTILE sketch rollup (DataSketches KLL via the custom
-    // TypedImperativeAggregates in functions/KllQuantileAgg.scala) —
-    // the percentile analogue of q_hll_rollup, which Spark has no
-    // built-in for: per-(type, hour) value sketches built once, then
+    // mergeable QUANTILE sketch rollup (Spark's built-in DataSketches
+    // KLL aggregates, k = 200) — the percentile analogue of
+    // q_hll_rollup: per-(type, hour) value sketches built once, then
     // MERGED per type and asked for p50/p95/p99 — a 100 TB latency
     // rollup answered from kilobyte binaries, never a raw re-scan.
     // Rows-only (KLL estimates aren't SQL-reproducible); OpsSpec bounds
     // the rank error vs exact quantile_cont.
     "q_kll_rollup" -> { (s, dir) =>
-      import org.apache.spark.sql.GraftBridge
-      import graft.functions.{KllSketchAgg, KllMergeAgg, KllQuantiles}
-      val sk = GraftBridge.column(
-        KllSketchAgg(GraftBridge.expression(col("value")))
-          .toAggregateExpression())
       val hourly = events(s, dir)
         .groupBy(col("event_type"),
           date_trunc("hour", col("ts")).as("hour_start"))
-        .agg(sk.as("sk"))
-      val merged = GraftBridge.column(
-        KllMergeAgg(GraftBridge.expression(col("sk")))
-          .toAggregateExpression())
+        .agg(kll_sketch_agg_double(col("value")).as("sk"))
       hourly.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_hours"), merged.as("msk"))
+        .agg(count(lit(1)).as("n_hours"),
+          kll_merge_agg_double(col("sk")).as("msk"))
         .select(col("event_type"), col("n_hours"),
-          GraftBridge.column(KllQuantiles(
-            GraftBridge.expression(col("msk")),
-            GraftBridge.expression(array(lit(0.5), lit(0.95), lit(0.99)))))
-            .as("approx_q"))
+          kll_sketch_get_quantile_double(col("msk"),
+            array(lit(0.5), lit(0.95), lit(0.99))).as("approx_q"))
         .select(col("event_type"), col("n_hours"),
           round(element_at(col("approx_q"), 1), 6).as("p50"),
           round(element_at(col("approx_q"), 2), 6).as("p95"),

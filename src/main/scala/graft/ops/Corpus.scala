@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -641,28 +641,26 @@ object Corpus {
     // Rows-only: theta estimates aren't SQL-reproducible; the audit
     // below scores them against the exact matrix every round.
     "corpus_overlap_theta" -> { (s, dir) =>
-      import org.apache.spark.sql.GraftBridge
-      import graft.functions.{ThetaOverlap, ThetaSketchAgg}
-      val sk = GraftBridge.column(
-        ThetaSketchAgg(GraftBridge.expression(Text.fingerprint(col("text"))))
-          .toAggregateExpression())
       val perSrc = t(s, dir, "documents")
-        .groupBy(col("source")).agg(sk.as("sk"))
+        .groupBy(col("source"))
+        .agg(theta_sketch_agg(Text.fingerprint(col("text"))).as("sk"))
+      // [|A|, |B|, |A ∪ B|, |A ∩ B|] as doubles, like the exact matrix
+      def est(sk: Column) = theta_sketch_estimate(sk).cast(DoubleType)
       val pairs = perSrc.select(col("source").as("source_a"), col("sk").as("ska"))
         .join(broadcast(perSrc
           .select(col("source").as("source_b"), col("sk").as("skb"))),
           col("source_a") < col("source_b"))
         .select(col("source_a"), col("source_b"),
-          GraftBridge.column(ThetaOverlap(
-            GraftBridge.expression(col("ska")),
-            GraftBridge.expression(col("skb")))).as("o"))
+          est(col("ska")).as("n_a"), est(col("skb")).as("n_b"),
+          est(theta_union(col("ska"), col("skb"))).as("n_union"),
+          est(theta_intersection(col("ska"), col("skb"))).as("n_inter"))
       pairs.select(col("source_a"), col("source_b"),
-          round(element_at(col("o"), 1), 2).as("n_a_est"),
-          round(element_at(col("o"), 2), 2).as("n_b_est"),
-          round(element_at(col("o"), 3), 2).as("union_est"),
-          round(element_at(col("o"), 4), 2).as("inter_est"),
-          round(when(element_at(col("o"), 3) === 0, lit(0.0))
-            .otherwise(element_at(col("o"), 4) / element_at(col("o"), 3)), 6)
+          round(col("n_a"), 2).as("n_a_est"),
+          round(col("n_b"), 2).as("n_b_est"),
+          round(col("n_union"), 2).as("union_est"),
+          round(col("n_inter"), 2).as("inter_est"),
+          round(when(col("n_union") === 0, lit(0.0))
+            .otherwise(col("n_inter") / col("n_union")), 6)
             .as("jaccard_est"))
         .orderBy(col("source_a"), col("source_b"))
     },

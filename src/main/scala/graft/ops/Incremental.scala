@@ -159,17 +159,12 @@ object Incremental {
     * (stronger than the dedup handlers' at-least-once). */
   def processSketchBatch(batch: DataFrame, keyCol: String, itemCol: String,
       stateDir: String): Unit = {
-    import org.apache.spark.sql.GraftBridge
-    import graft.functions.{ThetaSketchAgg, ThetaUnionAgg}
     val sp = batch.sparkSession
-    val build = GraftBridge.column(ThetaSketchAgg(GraftBridge.expression(
-      col(itemCol).cast(StringType))).toAggregateExpression())
-    val bs = batch.groupBy(col(keyCol)).agg(build.as("sk"))
-    val merge = GraftBridge.column(ThetaUnionAgg(
-      GraftBridge.expression(col("sk"))).toAggregateExpression())
+    val bs = batch.groupBy(col(keyCol))
+      .agg(theta_sketch_agg(col(itemCol).cast(StringType)).as("sk"))
     val merged = if (graft.Util.Fs.exists(sp, stateDir))
       bs.unionByName(sp.read.parquet(stateDir))
-        .groupBy(col(keyCol)).agg(merge.as("sk"))
+        .groupBy(col(keyCol)).agg(theta_union_agg(col("sk")).as("sk"))
     else bs
     // eager checkpoint cuts the read-then-overwrite cycle on stateDir
     merged.localCheckpoint().write.mode("overwrite").parquet(stateDir)
@@ -1080,8 +1075,6 @@ object Incremental {
     // estimates aren't SQL-reproducible past exact mode); the audit
     // below scores the estimates against the exact distinct counts.
     "stream_incr_distinct" -> { (s, dir) =>
-      import org.apache.spark.sql.GraftBridge
-      import graft.functions.ThetaOverlap
       val tmp = java.nio.file.Files
         .createTempDirectory("graft_sketch_stream").toString
       val ev = events(s, dir).select(col("event_type"), col("user_id"))
@@ -1091,9 +1084,8 @@ object Incremental {
         "event_type", "user_id", s"$tmp/state")
       val out = s.read.parquet(s"$tmp/state")
         .select(col("event_type"),
-          round(element_at(GraftBridge.column(ThetaOverlap(
-            GraftBridge.expression(col("sk")),
-            GraftBridge.expression(col("sk")))), 1), 2).as("approx_users"))
+          round(theta_sketch_estimate(col("sk")).cast(DoubleType), 2)
+            .as("approx_users"))
         .orderBy(col("event_type"))
         .localCheckpoint()
       graft.Util.rmrf(new java.io.File(tmp))

@@ -41,6 +41,14 @@ object RawColumnarSink {
   private def leF(f: Float): Array[Byte] =
     ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN).putFloat(f).array()
 
+  /** The one JSON value rule of the `.json` arrays and `.key` decoders:
+    * numbers are written bare, every other type (string, date,
+    * timestamp) as a JSON string, and null as `null`. */
+  private def quoted(t: DataType): Boolean =
+    !(t == IntegerType || t == LongType || t == DoubleType)
+  private def jsonValue(v: Any, quoted: Boolean): String =
+    if (v == null) "null" else if (quoted) jsonString(v.toString) else v.toString
+
   /** Streams `result.df` in its current row order (= file order when
     * the input was a single file read) and writes the per-column files.
     * @return the index map (original name → written filename) */
@@ -68,19 +76,16 @@ object RawColumnarSink {
       def close(): Unit = os.close()
     }
     /** `.json` array, reference stringify layout (`index.js:510-521`):
-      * strings JSON-escaped, numbers raw, ",\n " separators. */
-    class Json(name: String, quoted: Boolean) extends Sink {
+      * values per [[jsonValue]], ",\n " separators. */
+    class Json(name: String, valueType: DataType) extends Sink {
       val ext = ".json"; private val os = out(name, ext)
+      private val q = quoted(valueType)
       private var first = true
       os.write('[')
       def add(v: Any): Unit = {
         if (!first) os.write(",\n ".getBytes)
         first = false
-        val s =
-          if (v == null) "null"
-          else if (quoted) jsonString(v.toString)
-          else v.toString
-        os.write(s.getBytes("UTF-8"))
+        os.write(jsonValue(v, q).getBytes("UTF-8"))
       }
       def close(): Unit = { os.write("]\n".getBytes); os.close() }
     }
@@ -96,39 +101,32 @@ object RawColumnarSink {
     class Cat(name: String, valueType: DataType) extends Sink {
       val codes = new mutable.ArrayBuffer[Int]()
       val decoder = new mutable.ArrayBuffer[String]()
-      private val seen = mutable.HashMap.empty[String, Int]
-      private val quoted = valueType == StringType || valueType == DateType
+      private val seen = mutable.HashMap.empty[Any, Int]
+      private val q = quoted(valueType)
       def ext: String =
         if (decoder.size <= 256) ".k8"
         else if (decoder.size <= 65536) ".k16"
         else ".json"
-      def add(v: Any): Unit = {
-        val s = if (v == null) "null" else v.toString
-        codes += seen.getOrElseUpdate(s, { decoder += s; decoder.size - 1 })
-      }
+      def add(v: Any): Unit =
+        codes += seen.getOrElseUpdate(v, {
+          decoder += jsonValue(v, q); decoder.size - 1 })
       def close(): Unit = {
+        val os = out(name, ext)
         if (decoder.size > 65536) {
-          val os = out(name, ext)
           os.write('[')
-          var first = true
-          codes.foreach { c =>
-            if (!first) os.write(",\n ".getBytes)
-            first = false
-            val d = decoder(c)
-            val s = if (d == "null") "null" else if (quoted) jsonString(d) else d
-            os.write(s.getBytes("UTF-8"))
+          codes.indices.foreach { i =>
+            if (i > 0) os.write(",\n ".getBytes)
+            os.write(decoder(codes(i)).getBytes("UTF-8"))
           }
           os.write("]\n".getBytes)
           os.close()
           return
         }
-        val os = out(name, ext)
         if (decoder.size <= 256) codes.foreach(c => os.write(c))
         else codes.foreach { c => os.write(c & 0xff); os.write((c >> 8) & 0xff) }
         os.close()
         val key = out(name, ext + ".key")
-        key.write(("[" + decoder.map(d =>
-          if (quoted) jsonString(d) else d).mkString(",\n ") + "]\n").getBytes("UTF-8"))
+        key.write(decoder.mkString("[", ",\n ", "]\n").getBytes("UTF-8"))
         key.close()
       }
     }
@@ -138,8 +136,7 @@ object RawColumnarSink {
       else f.dataType match {
         case IntegerType => new I32(f.sanitized)
         case DoubleType => new F32(f.sanitized)
-        case LongType => new Json(f.sanitized, quoted = false)
-        case _ => new Json(f.sanitized, quoted = true)
+        case t => new Json(f.sanitized, t)
       }
     }
     val it = df.toLocalIterator()

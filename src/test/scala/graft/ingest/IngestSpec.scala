@@ -215,6 +215,11 @@ class IngestSpec extends AnyFunSuite with SparkSuite {
     val rows = Collimate.read(spark, f.toString, multiLine = true)
       .orderBy("id").collect().map(_.getString(1)).toSeq
     assert(rows == Seq("line one\nline two", "plain"))
+    // the CLI's -m reaches the scan too
+    val out = dir.resolve("out").toString
+    CollimateCli.run(spark, Array("-m", f.toString, out))
+    assert(spark.read.parquet(s"$out/data.parquet")
+      .orderBy("id").collect().map(_.getString(1)).toSeq == rows)
     graft.Util.rmrf(dir.toFile)
   }
 
@@ -263,6 +268,28 @@ class IngestSpec extends AnyFunSuite with SparkSuite {
     val idxJson = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$out/index.json"))
     assert(idxJson.contains("\"Seg\" : \"seg.k8\""))
+    graft.Util.rmrf(dir.toFile)
+  }
+
+  test("raw sink: a categorical timestamp column writes a valid-JSON .key") {
+    import org.json4s._
+    val dir = java.nio.file.Files.createTempDirectory("graft_raw_ts")
+    val csv = dir.resolve("t.csv")
+    // row 20's empty cell is a null: the decoder's JSON null
+    val rows = (1 to 20).map(i =>
+      if (i == 20) s"$i," else s"$i,2024-01-0${2 - i % 2} 10:00:00")
+      .mkString("\n")
+    java.nio.file.Files.writeString(csv, s"id,ts\n$rows\n")
+    val res = Collimate(spark, csv.toString,
+      Collimate.Options(parseDates = true))
+    val ts = res.schema.fields.find(_.name == "ts").get
+    assert(ts.dataType == TimestampType && ts.categorical)
+    val out = dir.resolve("out").toString
+    assert(graft.sources.RawColumnarSink.write(res, out)("ts") == "ts.k8")
+    val key = org.json4s.jackson.JsonMethods.parse(
+      java.nio.file.Files.readString(java.nio.file.Paths.get(s"$out/ts.k8.key")))
+    assert(key == JArray(List(JString("2024-01-01 10:00:00.0"),
+      JString("2024-01-02 10:00:00.0"), JNull)))
     graft.Util.rmrf(dir.toFile)
   }
 

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -932,29 +933,44 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("theta sketches: exact-mode set algebra matches hand-computed sets") {
-    import org.apache.spark.sql.GraftBridge
-    import graft.functions.{ThetaOverlap, ThetaSketchAgg, ThetaUnionAgg}
+    def est(sk: Column) = theta_sketch_estimate(sk).cast("double")
     val df = Seq(("A", "a"), ("A", "b"), ("A", "c"),
       ("B", "b"), ("B", "c"), ("B", "d")).toDF("src", "item")
-    val agg = GraftBridge.column(
-      ThetaSketchAgg(GraftBridge.expression($"item")).toAggregateExpression())
-    val sk = df.groupBy($"src").agg(agg.as("sk"))
+    val sk = df.groupBy($"src").agg(theta_sketch_agg($"item").as("sk"))
     // |A|=3 |B|=3 |A∪B|=4 |A∩B|=2 — below 4k items the sketch is exact
     val o = sk.filter($"src" === "A").select($"sk".as("ska"))
       .crossJoin(sk.filter($"src" === "B").select($"sk".as("skb")))
-      .select(GraftBridge.column(ThetaOverlap(
-        GraftBridge.expression($"ska"),
-        GraftBridge.expression($"skb"))).as("o"))
+      .select(array(est($"ska"), est($"skb"),
+        est(theta_union($"ska", $"skb")),
+        est(theta_intersection($"ska", $"skb"))).as("o"))
       .head.getSeq[Double](0)
     assert(o == Seq(3.0, 3.0, 4.0, 2.0))
     // rollup merge: union the two per-src sketches → estimate 4
-    val merged = sk.agg(GraftBridge.column(
-      ThetaUnionAgg(GraftBridge.expression($"sk")).toAggregateExpression())
-      .as("u"))
-    val u = merged.select(GraftBridge.column(ThetaOverlap(
-        GraftBridge.expression($"u"), GraftBridge.expression($"u"))).as("o"))
-      .head.getSeq[Double](0)
-    assert(u.head == 4.0)
+    val merged = sk.agg(theta_union_agg($"sk").as("u"))
+    val u = merged.select(est($"u")).head.getDouble(0)
+    assert(u == 4.0)
+  }
+
+  test("rows-only sketch queries at sf0.01: exact-mode audits read 0, " +
+      "schemas pinned") {
+    val sf = "/root/testdata/sf0.01"
+    def run(q: String) = graft.SparkEntry.queries(q)(spark, sf)
+    def schema(q: String) =
+      run(q).schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq
+    val theta = run("audit_theta_overlap_error").head
+    assert(theta.getAs[Double]("max_abs_err") == 0.0)
+    assert(theta.getAs[Double]("mean_abs_err") == 0.0)
+    assert(run("audit_stream_incr_distinct").head
+      .getAs[Double]("max_rel_err") == 0.0)
+    assert(schema("corpus_overlap_theta") == Seq("source_a" -> "string",
+      "source_b" -> "string", "n_a_est" -> "double", "n_b_est" -> "double",
+      "union_est" -> "double", "inter_est" -> "double",
+      "jaccard_est" -> "double"))
+    assert(schema("stream_incr_distinct") ==
+      Seq("event_type" -> "string", "approx_users" -> "double"))
+    assert(schema("q_kll_rollup") == Seq("event_type" -> "string",
+      "n_hours" -> "bigint", "p50" -> "double", "p95" -> "double",
+      "p99" -> "double"))
   }
 
   test("evalMetrics: recall/MRR/nDCG match hand-computed values") {
@@ -979,15 +995,11 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("processSketchBatch: cross-batch distinct union; replay is a no-op") {
-    import org.apache.spark.sql.GraftBridge
-    import graft.functions.ThetaOverlap
     val tmp = java.nio.file.Files
       .createTempDirectory("graft_sketch_spec").toString
     def est(): Map[String, Double] = {
       val sk = spark.read.parquet(s"$tmp/state")
-      sk.select($"k", GraftBridge.column(ThetaOverlap(
-          GraftBridge.expression($"sk"),
-          GraftBridge.expression($"sk"))).getItem(0).as("e"))
+      sk.select($"k", theta_sketch_estimate($"sk").cast("double").as("e"))
         .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     }
     val b1 = Seq(("a", 1L), ("a", 2L), ("b", 1L)).toDF("k", "u")
