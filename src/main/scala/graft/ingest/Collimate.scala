@@ -2,7 +2,7 @@ package graft.ingest
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 
 import graft.Util.jsonString
 
@@ -11,9 +11,10 @@ import graft.Util.jsonString
   * columnar (Parquet) sink + optional index sidecar.
   *
   * The reference's whole-file-in-RAM pipeline (`index.js:552`) becomes
-  * a bounded sampling aggregate that decides the schema (one narrow
-  * count job plus one two-shuffle aggregation in TypeInference.infer,
-  * 4 Spark jobs under AQE) and one full declarative pass that casts and
+  * a driver-side header read (no Spark job), a bounded sampling
+  * aggregate that decides the schema (one narrow count job plus one
+  * one-shuffle aggregation in TypeInference.infer, 3 Spark jobs under
+  * AQE) and one full declarative pass that casts and
   * writes — the 100 TB shape: no rows ever reach the driver, the write
   * is embarrassingly parallel, and Parquet supplies the dictionary
   * encoding the reference hand-rolls (O10/O13).
@@ -34,23 +35,18 @@ object Collimate {
 
   /** Extension-dispatched scan (reference `index.js:554-572`): `.csv`
     * comma, `.tsv` tab — header row, trimmed cells, no auto-typing —
-    * `.json` a whole-file array of objects. */
+    * `.json` a whole-file array of objects. A CSV's header is read on the
+    * driver (`GraftBridge.csvHeaderSchema`) and handed to the reader, so
+    * the scan starts no Spark job. */
   def read(spark: SparkSession, path: String,
       multiLine: Boolean = false): DataFrame = {
     val lower = path.toLowerCase
-    if (lower.endsWith(".csv") || lower.endsWith(".tsv"))
-      spark.read
-        .option("header", "true")
-        .option("sep", if (lower.endsWith(".tsv")) "\t" else ",")
-        .option("ignoreLeadingWhiteSpace", "true")
-        .option("ignoreTrailingWhiteSpace", "true")
-        .option("inferSchema", "false") // typing is ours (O4/O5)
-        // RFC 4180 `""` quote doubling, csv-parse's default (Spark's
-        // own default escape is backslash)
-        .option("escape", "\"")
-        .option("multiLine", multiLine.toString)
-        .csv(path)
-    else if (lower.endsWith(".jsonl") || lower.endsWith(".ndjson"))
+    if (lower.endsWith(".csv") || lower.endsWith(".tsv")) {
+      val csv = csvOptions(path, multiLine)
+      val reader = spark.read.options(csv)
+      GraftBridge.csvHeaderSchema(spark, path, csv)
+        .fold(reader)(s => reader.schema(s)).csv(path)
+    } else if (lower.endsWith(".jsonl") || lower.endsWith(".ndjson"))
       // extension beyond the reference: line-delimited JSON is the
       // splittable format — a whole-file array (.json below) must be
       // parsed by a single task
@@ -59,6 +55,20 @@ object Collimate {
       spark.read.option("multiLine", "true").json(path)
     else sys.error(s"Unrecognized extension: $path") // index.js:574-576
   }
+
+  /** Reader options of a `.csv`/`.tsv` scan: header row, trimmed cells,
+    * no auto-typing. */
+  private[ingest] def csvOptions(path: String,
+      multiLine: Boolean): Map[String, String] = Map(
+    "header" -> "true",
+    "sep" -> (if (path.toLowerCase.endsWith(".tsv")) "\t" else ","),
+    "ignoreLeadingWhiteSpace" -> "true",
+    "ignoreTrailingWhiteSpace" -> "true",
+    "inferSchema" -> "false", // typing is ours (O4/O5)
+    // RFC 4180 `""` quote doubling, csv-parse's default (Spark's own
+    // default escape is backslash)
+    "escape" -> "\"",
+    "multiLine" -> multiLine.toString)
 
   /** Library entry (reference E3, `collimate(rows, parse_dates)`,
     * `index.js:132`): infer + cast an already-loaded frame. */
@@ -74,9 +84,12 @@ object Collimate {
 
   /** Columnar sink (O13/O14): Parquet dataset dir + `index.json`
     * sidecar mapping original name → sanitized name / logical type /
-    * categorical flag (driver-side, metadata only). */
+    * categorical flag (driver-side, metadata only). The Parquet write's
+    * `file:` paths go through `LocalFs`, which sets permissions without
+    * forking `chmod`; the files and their permission bits are the same. */
   def write(result: Result, outDir: String, opts: Options = Options()): Unit = {
-    result.df.write.mode("overwrite").parquet(s"$outDir/data.parquet")
+    result.df.write.options(graft.sources.LocalFs.WriterOptions)
+      .mode("overwrite").parquet(s"$outDir/data.parquet")
     if (opts.writeIndex) {
       val entries = result.schema.fields.map { f =>
         s"""${jsonString(f.name)}: {"column": ${jsonString(f.sanitized)}, """ +

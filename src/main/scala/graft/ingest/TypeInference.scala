@@ -28,12 +28,13 @@ case class IngestSchema(
   * evaluating the whole prefix at once on the lattice
   * int → double → string, which is what we do: the prefix is exploded
   * to (column, value) pairs and grouped to distinct values with their
-  * multiplicity; a second grouping per column counts the distinct
-  * values and sums the multiplicities of the values that survive
-  * `try_cast` at each lattice level and each strict date parse. Every
-  * predicate runs once per distinct value and the plan does not grow
-  * with the column count. Cost: one narrow count job plus one
-  * two-shuffle aggregation, 4 Spark jobs under AQE
+  * multiplicity; each reduce task then folds its distinct values into
+  * per-column partials — the distinct count and the multiplicities of
+  * the values that survive `try_cast` at each lattice level and each
+  * strict date parse — which the driver sums. Every predicate runs once
+  * per distinct value and the plan does not grow with the column count.
+  * Cost: one narrow count job plus one one-shuffle aggregation, 3 Spark
+  * jobs under AQE
   * (SURVEY.md §7 "inference at 100 TB": never one job per column, never
   * a driver-side collect of rows).
   *
@@ -63,7 +64,8 @@ object TypeInference {
 
   /** Infer a schema for `df` (any input types; cells are canonicalized
     * as strings first, mirroring the CSV path). One narrow count job,
-    * then one two-shuffle aggregation over the prefix. */
+    * then one one-shuffle aggregation over the prefix: 3 Spark jobs under
+    * AQE. */
   def infer(df: DataFrame, parseDates: Boolean = false,
       scanCap: Long = DefaultScanCap): IngestSchema = {
     val cols = df.columns.toSeq
@@ -101,8 +103,11 @@ object TypeInference {
     val prefix = df.filter(
       monotonically_increasing_id() - shiftleft(pid.cast(LongType), 33) <
         try_element_at(typedLit(need), pid + 1))
-    // (column, value) → multiplicity m, then per column: dct = #values,
-    // nn = Σm and one vote Σm·[pred(v)] per lattice level and format
+    // (column, value) → multiplicity m in one shuffle; then each reduce
+    // task folds its distinct values into per-column partials — dct =
+    // #values, nn = Σm and one vote Σm·[pred(v)] per lattice level and
+    // format — and the driver sums the partials (≤ one per column per
+    // task), as it does the counts above
     val (v, m) = (col("v"), col("m"))
     val asLong = v.try_cast(LongType)
     val preds = Seq(asLong.isNotNull, asLong.between(IntMin, IntMax),
@@ -110,19 +115,30 @@ object TypeInference {
         Dates.Formats.map(Dates.parses(v, _)) ++
           Dates.TimestampFormats.map(Dates.tparses(v, _))
       else Nil)
+    val width = 2 + preds.size
     val stats = prefix
       .select(posexplode(array(cols.map(c =>
         Nulls.canonicalize(col(c).cast(StringType))): _*)).as(Seq("i", "v")))
       .where(v.isNotNull)
       .groupBy("i", "v").agg(count(lit(1)).as("m"))
-      .groupBy("i").agg(count(lit(1)),
-        sum(m) +: preds.map(p => sum(when(p, m).otherwise(0L))): _*)
-      .collect()
-      .map(r => r.getInt(0) -> (1 until r.length).map(r.getLong)).toMap
+      .select(col("i") +: m +: preds.map(coalesce(_, lit(false))): _*)
+      .queryExecution.toRdd
+      .mapPartitions { rows =>
+        val acc = scala.collection.mutable.LongMap.empty[Array[Long]]
+        rows.foreach { r =>
+          val s = acc.getOrElseUpdate(r.getInt(0), new Array[Long](width))
+          val k = r.getLong(1)
+          s(0) += 1; s(1) += k
+          var j = 2
+          while (j < width) { if (r.getBoolean(j)) s(j) += k; j += 1 }
+        }
+        acc.iterator
+      }.collect()
+      .groupMapReduce(_._1.toInt)(_._2)((a, b) => a.lazyZip(b).map(_ + _))
     val thresh = Categorical.threshold(n, scan)
     val fields = cols.zipWithIndex.map { case (c, i) =>
       // an all-null column has no values: dct = nn = 0
-      val s = stats.getOrElse(i, Seq.fill(2 + preds.size)(0L))
+      val s = stats.getOrElse(i, new Array[Long](width)).toSeq
       val Seq(dct, nn, lng, intOk, dbl) = s.take(5)
       // exactly-one-surviving-format rule, index.js:373-378; the date
       // and timestamp candidate families are disjoint on any single

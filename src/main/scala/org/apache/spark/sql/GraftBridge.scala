@@ -1,12 +1,22 @@
 package org.apache.spark.sql
 
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.Path
+
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityParser}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.datasources.CodecStreams
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.util.HadoopFSUtils
 
-/** Column ↔ Expression bridge for graft's custom Catalyst expressions.
-  * `ExpressionUtils` is `private[sql]` in Spark 4, so the conversion has
-  * to be exposed from inside the package — this is the only file outside
-  * the `graft` namespace. */
+/** Bridge to Spark internals that graft needs and Spark keeps
+  * `private[sql]`: the Column ↔ Expression conversion for graft's custom
+  * Catalyst expressions (`ExpressionUtils`) and the CSV header parsing
+  * (`UnivocityParser`, `CSVUtils`) behind the driver-side header read.
+  * Both have to be reached from inside the package — this is the only
+  * file outside the `graft` namespace. */
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -50,4 +60,52 @@ object GraftBridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
+
+  /** The schema `spark.read.options(options).csv(path)` infers with
+    * `header` on and `inferSchema` off — every column a nullable string
+    * named by the header record — computed on the driver with Spark's
+    * own header functions. Spark learns it by running a job over the
+    * scan (`take(1)`); passing this schema to the reader instead starts
+    * no job.
+    *
+    * Input files: `path`'s glob matches, directories listed one level
+    * deep, with the names Spark skips (`_`- and `.`-prefixed) left out.
+    * The header comes from the first file in path order that holds a
+    * record; if none does, the schema is empty, as Spark infers. One
+    * difference: Spark reads the header from its first split, the
+    * largest file. The two choices differ only when the files' headers
+    * differ. `None` when the path names no input file, so that Spark's
+    * own read reports it. */
+  def csvHeaderSchema(spark: SparkSession, path: String,
+      options: Map[String, String]): Option[StructType] = {
+    val sqlConf = spark.sessionState.conf
+    val opts = new CSVOptions(options, sqlConf.csvColumnPruning,
+      sqlConf.sessionLocalTimeZone, sqlConf.columnNameOfCorruptRecord)
+    val conf = spark.sessionState.newHadoopConfWithOptions(options)
+    val glob = new Path(path)
+    val fs = glob.getFileSystem(conf)
+    val files = Option(fs.globStatus(glob)).toSeq.flatten
+      .flatMap(s => if (s.isDirectory) fs.listStatus(s.getPath).toSeq else Seq(s))
+      .filter(s => s.isFile && !HadoopFSUtils.shouldFilterOutPathName(s.getPath.getName))
+      .map(_.getPath).sortBy(_.toString)
+    // line mode: the first non-empty line, parsed (TextInputCSVDataSource);
+    // multiLine: the first record of the token stream (MultiLineCSVDataSource)
+    def firstRecord(file: Path): Option[Array[String]] =
+      if (opts.multiLine) {
+        val in = CodecStreams.createInputStream(conf, file)
+        try UnivocityParser.tokenizeStream(in, shouldDropHeader = false,
+          new CsvParser(opts.asParserSettings), opts.charset).nextOption()
+        finally in.close()
+      } else CSVUtils.readHeaderLine(file, opts, conf)
+        .map(new CsvParser(opts.asParserSettings).parseLine)
+    Option.when(files.nonEmpty) {
+      files.iterator.map(firstRecord).collectFirst { case Some(r) => r } match {
+        case Some(record) if record != null =>
+          StructType(CSVUtils.makeSafeHeader(record,
+            sqlConf.caseSensitiveAnalysis, opts).toSeq
+            .map(StructField(_, StringType, nullable = true)))
+        case _ => StructType(Nil)
+      }
+    }
+  }
 }

@@ -153,9 +153,9 @@ class IngestSpec extends AnyFunSuite with SparkSuite {
     assert(s.fields.head.distinct == 150)
   }
 
-  test("inference runs at most 4 Spark jobs") {
+  /** Spark jobs started while `body` runs. */
+  def jobsIn(body: => Unit): Int = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val df = Collimate.read(spark, fixture("late_surprise.csv"))
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
@@ -165,10 +165,91 @@ class IngestSpec extends AnyFunSuite with SparkSuite {
     org.apache.spark.graft.ListenerBus.drain(sc)
     sc.addSparkListener(listener)
     try {
-      TypeInference.infer(df, parseDates = true)
+      body
       org.apache.spark.graft.ListenerBus.drain(sc)
     } finally sc.removeSparkListener(listener)
-    assert(jobs.get > 0 && jobs.get <= 4, s"${jobs.get} jobs")
+    jobs.get
+  }
+
+  test("inference runs at most 3 Spark jobs") {
+    val df = Collimate.read(spark, fixture("late_surprise.csv"))
+    val jobs = jobsIn(TypeInference.infer(df, parseDates = true))
+    assert(jobs > 0 && jobs <= 3, s"$jobs jobs")
+  }
+
+  test("one-shuffle inference: partials merged across reduce tasks agree") {
+    // AQE folds a tiny prefix into one reduce partition; without that,
+    // each column's values spread over all shuffle partitions and the
+    // driver sums one partial per column per task
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    Seq("late_surprise.csv", "types_mixed.csv", "nulls.csv").foreach { f =>
+      val df = Collimate.read(spark, fixture(f))
+      val folded = TypeInference.infer(df, parseDates = true)
+      spark.conf.set(key, "false")
+      val spread = try TypeInference.infer(df, parseDates = true)
+        finally spark.conf.unset(key)
+      assert(spread == folded, f)
+    }
+  }
+
+  test("header fidelity: the driver-side header is Spark's inferred schema") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_header")
+    def check(name: String, body: String, multiLine: Boolean = false) = {
+      val f = dir.resolve(name)
+      java.nio.file.Files.writeString(f, body)
+      val spark0 = spark.read.options(Collimate.csvOptions(name, multiLine))
+        .csv(f.toString).schema
+      val ours = Collimate.read(spark, f.toString, multiLine).schema
+      assert(ours == spark0, name)
+      ours.fieldNames.toSeq
+    }
+    assert(check("dup.csv", "a,a,b\n1,2,3\n") == Seq("a0", "a1", "b"))
+    assert(check("blank.csv", ",x\n1,2\n") == Seq("_c0", "x"))
+    assert(check("quoted.csv", "\"a,b\",c\n1,2\n") == Seq("a,b", "c"))
+    assert(check("padded.csv", "  a , b  \n1,2\n") == Seq("a", "b"))
+    assert(check("t.tsv", "a b\tc\n1\t2\n") == Seq("a b", "c"))
+    assert(check("ml.csv", "\"a\nb\",c\n\"1\n2\",3\n", multiLine = true) ==
+      Seq("a\nb", "c"))
+    assert(check("lead.csv", "\n\n   \na,b\n1,2\n") == Seq("a", "b"))
+    assert(check("hdr.csv", "a,b\n") == Seq("a", "b"))
+    assert(check("zero.csv", "") == Nil)
+    assert(check("zero_ml.csv", "", multiLine = true) == Nil)
+    // a directory of part files, read through a glob (IngestQueries.roundtrip)
+    val parts = dir.resolve("parts").toString
+    spark.range(10).selectExpr("id", "id * 2 AS `two x`").repartition(2)
+      .write.option("header", "true").csv(parts)
+    val glob = s"$parts/*.csv"
+    assert(Collimate.read(spark, glob).schema ==
+      spark.read.options(Collimate.csvOptions(glob, multiLine = false))
+        .csv(glob).schema)
+    assert(Collimate.read(spark, glob).count() == 10)
+    // no job: the header is read on the driver
+    assert(jobsIn(Collimate.read(spark, glob)) == 0)
+    assert(jobsIn(Collimate.read(spark, fixture("types_basic.csv"),
+      multiLine = true)) == 0)
+    graft.Util.rmrf(dir.toFile)
+  }
+
+  test("chmod-free Parquet write: same files, permission bits and rows") {
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft_localfs")
+    val r = Collimate(spark, fixture("late_surprise.csv"))
+    val plain = dir.resolve("plain")
+    r.df.write.parquet(plain.toString)
+    Collimate.write(r, dir.resolve("ours").toString)
+    val ours = dir.resolve("ours/data.parquet")
+    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+    def tree(root: Path) = Files.walk(root).iterator.asScala.map { p =>
+      root.relativize(p).toString.replaceAll(uuid, "UUID") ->
+        java.nio.file.attribute.PosixFilePermissions.toString(
+          Files.getPosixFilePermissions(p))
+    }.toSeq.sorted
+    assert(tree(ours) == tree(plain))
+    assert(tree(plain).map(_._1).toSet.contains("._SUCCESS.crc"))
+    assert(spark.read.parquet(ours.toString).collect().toSeq.sortBy(_.toString) ==
+      spark.read.parquet(plain.toString).collect().toSeq.sortBy(_.toString))
+    graft.Util.rmrf(dir.toFile)
   }
 
   test("sanitize replicates the reference chain (O12)") {
