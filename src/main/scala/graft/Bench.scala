@@ -5,10 +5,18 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{GraftBridge, SparkSession}
 
-/** Perf harness: runs the headline queries (the compute-heavy
-  * representatives of each operator family — ingest roundtrips are
-  * excluded since they mostly measure CSV re-export) on
-  * SPARK_GRAFT_SF_DIR and prints one JSON line for the driver. */
+/** The timing main. By default it runs the headline queries (the
+  * compute-heavy representatives of each operator family — ingest
+  * roundtrips are excluded since they mostly measure CSV re-export) on
+  * SPARK_GRAFT_SF_DIR; SPARK_GRAFT_BENCH_ONLY names any comma-separated
+  * set of registered queries instead, which makes it the profiler of a
+  * single query too. Each query gets one untimed warm-up and three
+  * timed runs; the result is one JSON line on stdout, printed last,
+  * plus the per-query diagnostics in BENCH_DETAIL.json (or
+  * SPARK_GRAFT_DETAIL_PATH).
+  *
+  * Usage: SPARK_GRAFT_SF_DIR=<sfDir> [SPARK_GRAFT_BENCH_ONLY=q1,q2]
+  * sbt "runMain graft.Bench" */
 object Bench {
   val headline: Seq[String] = Seq(
     "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier_volume",
@@ -99,9 +107,8 @@ object Bench {
   final case class RunStat(sec: Double, shufWMb: Double, shufRMb: Double,
       spillMb: Double)
 
-  /** The one timing path of Bench and Profile: a between-runs reset plus
-    * timed runs with their shuffle/spill bytes. The bytes are task-metric
-    * counters accumulated by a listener ("measure, don't guess" for the
+  /** The timing path: a between-runs reset plus timed runs with their
+    * shuffle/spill bytes. The bytes are task-metric counters accumulated by a listener ("measure, don't guess" for the
     * plan dimension the wall clock hides): a query whose time looks fine
     * but whose shuffle bytes grew 10× is a scale regression the timing
     * alone would miss at sf0.1. */
@@ -158,299 +165,114 @@ object Bench {
     }
   }
 
-  /** Excursion policy (r10 verdict item 2): a timed run whose wall
-    * clock exceeds `factor`× the query's own in-triple minimum — by at
-    * least `minGapSec`, so sub-second queries don't churn on noise —
-    * is a GC/scheduler excursion, not a measurement of the plan
-    * (r10's driver artifact: pagerank [5.79, 5.96, 44.2] at a 91 GiB
-    * heap; one more excursion landing on a different run index flips
-    * the median and fabricates a cross-round regression). Each
-    * excursion is discarded and re-run once via `rerun`, at most
-    * `maxRetries` total per query; a replacement that is itself an
-    * excursion is kept (evidence over silence) once retries run out.
-    * Returns the final runs plus how many raw runs were discarded —
-    * the count lands in BENCH_DETAIL as `excursions` so the artifact
-    * self-explains.
-    *
-    * Statistic caveat: the policy biases a legitimately BIMODAL query
-    * (slow 1-in-N by plan nature, not by GC) toward its fast mode. A
-    * row with excursions>0 is therefore a different statistic than a
-    * raw median — cross-round comparisons must treat such rows as
-    * fast-mode medians and consult the preserved per-run evidence in
-    * `sec_shufw_runs` before calling a regression (SURVEY §9k). */
-  /** Median-of-2 top-up (r12 lesson): two consecutive rounds produced
-    * >1.2× cross-round 10× "regressions" (adamic_adar r11 18.6 s vs a
-    * 13.7 s truth, kcore_ann r12 13.85 vs 9.3) that median-of-3
-    * re-runs dissolved — with only 2 runs the reported value is the
-    * SLOWER run, and the excursion policy can't fire when the pair is
-    * within 2.5× of itself. For any multi-second row measured with
-    * fewer than 3 runs, one extra run buys a real median; sub-second
-    * rows aren't worth the wall clock (their absolute error is
-    * bounded by the threshold). Returns how many runs to add. */
-  def topUpRuns(stats: Vector[RunStat], thresholdSec: Double = 5.0): Int =
-    if (stats.size == 2 && !stats.exists(_.sec < 0) &&
-      stats.map(_.sec).max > thresholdSec) 1 else 0
+  /** Timed runs per query: the median of 3 is the A/B statistic. */
+  val Runs = 3
 
-  def dropExcursions(raw: Vector[RunStat], rerun: () => RunStat,
-      factor: Double = 2.5, minGapSec: Double = 1.0,
-      maxRetries: Int = 3): (Vector[RunStat], Int) = {
-    var stats = raw
-    var discarded = 0
-    var retries = maxRetries
-    var done = false
-    while (!done && retries > 0) {
-      val mn = stats.map(_.sec).min
-      val idx = stats.indexWhere(s =>
-        s.sec > factor * mn && s.sec - mn > minGapSec)
-      if (idx < 0) done = true
-      else {
-        System.err.println(s"[bench] excursion discarded: " +
-          s"${stats(idx).sec}s vs min ${mn}s — re-running")
-        stats = stats.updated(idx, rerun())
-        discarded += 1
-        retries -= 1
-      }
-    }
-    (stats, discarded)
+  /** One query's outcome: its timed runs — a single `-1` run when the
+    * query failed, so it can never pass as a fast success — and the
+    * storage still pinned after its caches were cleared (a leaked
+    * persist). */
+  final case class QueryResult(name: String, runs: Vector[RunStat],
+      storageUsedMb: Double) {
+    def secs: Vector[Double] = runs.map(_.sec).sorted
+    def median: Double = secs(secs.size / 2)
   }
 
-  /** The r12 standing comparison rule, mechanized (r12 verdict ask 4):
-    * cross-round wall-total deltas under 15% with per-query shuffle
-    * bytes stable within 1% are box-window noise; anything more is
-    * signal worth a root-cause. Totals are computed over the COMMON
-    * query set only (the r12 advice lesson: a new query's seconds are
-    * not a regression), failed rows (sec < 0) excluded. An EMPTY
-    * filtered common set (disjoint SPARK_GRAFT_BENCH_ONLY subset, or
-    * all rows failed) is "incomparable", not a 0/0 "signal" — the
-    * r13 advice fix. Byte resolution is 0.1 MB, so the 1% test
-    * carries a 0.3 MB absolute floor — sub-floor rows cannot express
-    * a meaningful 1%. Returns (class, commonPriorTotal, commonTotal,
-    * driftedBytes, |filtered common set| — the size the totals were
-    * actually computed over, NOT the raw key intersection). */
-  def classifyVsPrior(priorSec: Map[String, Double],
-      curSec: Map[String, Double], priorBytes: Map[String, Double],
-      curBytes: Map[String, Double])
-      : (String, Double, Double, Seq[(String, Double, Double)], Int) = {
-    val common = curSec.keySet.intersect(priorSec.keySet)
-      .filter(q => curSec(q) >= 0 && priorSec(q) >= 0)
-    val pTot = common.toSeq.map(priorSec).sum
-    val cTot = common.toSeq.map(curSec).sum
-    val drifted = common.toSeq.sorted.flatMap { q =>
-      for {
-        p <- priorBytes.get(q); c <- curBytes.get(q)
-        if math.abs(c - p) > math.max(0.01 * p, 0.3)
-      } yield (q, p, c)
-    }
-    val cls =
-      if (common.isEmpty) "incomparable"
-      else if (pTot > 0 && math.abs(cTot / pTot - 1.0) <= 0.15 &&
-        drifted.isEmpty) "noise"
-      else "signal"
-    (cls, pTot, cTot, drifted, common.size)
+  /** The queries of one run: the headline set, or the registered
+    * queries that `only` lists (comma-separated, in that order). An
+    * unknown name fails the run rather than silently timing less. */
+  def selected(only: Option[String]): Seq[String] = only.fold(headline) {
+    list =>
+      val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct
+      val unknown = names.filterNot(SparkEntry.queries.contains)
+      require(names.nonEmpty && unknown.isEmpty,
+        s"SPARK_GRAFT_BENCH_ONLY=\"$list\" must list registered queries; " +
+          s"unknown: ${unknown.mkString(", ")}")
+      names
+  }
+
+  /** The stdout line (the compact shape a caller parses from the tail
+    * of the output, so the line stays short) and the detail record,
+    * which adds `cpus`, the run guard's `meta` fragment and the
+    * per-query maps: [min, median, max] spread, pinned
+    * storage, mean shuffle/spill MB per run, and the per-run
+    * [sec, shuffle_write_mb] pairs — a plan change inflates every run's
+    * bytes, a GC excursion only the slow run's. */
+  def summary(results: Seq[QueryResult], sfDir: String, cpus: String,
+      meta: String): (String, String) = {
+    def byQuery(f: QueryResult => Any): String =
+      results.map(r => "\"" + r.name + "\":" + f(r)).mkString("{", ",", "}")
+    def mean(f: RunStat => Double)(r: QueryResult): Double =
+      math.round(r.runs.map(f).sum / r.runs.size * 10) / 10.0
+    val total = results.map(_.median).sum
+    val line = s""""metric":"total","value":$total,"unit":"sec",""" +
+      s""""queries":${byQuery(_.median)},"sf":${Util.jsonString(sfDir)},""" +
+      s""""runs_per_query":$Runs,"stat":"median""""
+    // "*" is a legal cpus value (local[*]): a bare number only when it is one
+    val cpusJson = if (cpus.matches("[0-9]+")) cpus else Util.jsonString(cpus)
+    def spread(r: QueryResult) = s"[${r.secs.head},${r.median},${r.secs.last}]"
+    def perRun(r: QueryResult) =
+      r.runs.map(s => s"[${s.sec},${s.shufWMb}]").mkString("[", ",", "]")
+    val detail = s"""{$line,"cpus":$cpusJson,$meta,""" +
+      s""""spread":${byQuery(spread)},""" +
+      s""""storage_used_mb_after":${byQuery(_.storageUsedMb)},""" +
+      s""""shuffle_write_mb":${byQuery(mean(_.shufWMb))},""" +
+      s""""shuffle_read_mb":${byQuery(mean(_.shufRMb))},""" +
+      s""""spill_mb":${byQuery(mean(_.spillMb))},""" +
+      s""""sec_shufw_runs":${byQuery(perRun)}}"""
+    (s"{$line}", detail)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Exclusive run lock + quiescence report: round 8's driver bench
-    // read 80 s with 2–15× per-query spreads because a zombie chain
-    // contended the box during the window. The lock serializes graft
-    // JVMs; the contention/other-JVM flags land in BENCH_DETAIL so an
-    // anomalous record self-diagnoses instead of reading as a plan
+    val names = selected(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
+    // Exclusive run lock + quiescence report: the lock serializes graft
+    // JVMs, and the contention/other-JVM flags land in the detail record
+    // so an anomalous run self-diagnoses instead of reading as a plan
     // regression.
     val guard = tools.RunGuard.acquire("graft.Bench")
-    val cpus = Sessions.Cpus
     val spark = Sessions.local()
     // warm the JVM/codegen once on the smallest sf so per-query numbers
     // measure the query, not first-job session setup
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    // round-4 lesson: a single timed run per query made a uniform +20%
-    // drift across untouched queries indistinguishable from real plan
-    // regressions. Per query: one untimed warm-up, then median of 3
-    // timed runs; caches cleared between queries so one query's persist
-    // can't pressure the next one's executors.
-    val timedRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     def run(name: String): Unit = SparkEntry.queries(name)(spark, sfDir).count()
-    // post-query storage telemetry: cached bytes still pinned after
-    // clearCache() reveal a leaked persist; total/free executor storage
-    // memory contextualizes an anomalous timing (external memory
-    // pressure during the run shows up as shrunken free space). Round-5
-    // lesson: the official record once carried a 12× one-off excursion
-    // and nothing in the output could tell it from a plan regression.
-    def storageMb: (Double, Double) = {
-      val st = spark.sparkContext.getExecutorMemoryStatus.values
-      val maxMb = st.map(_._1).sum / 1e6
-      val freeMb = st.map(_._2).sum / 1e6
-      (math.round((maxMb - freeMb) * 10) / 10.0, math.round(freeMb * 10) / 10.0)
-    }
     val meter = new Meter(spark)
-    // Heap-mismatch warning (r10 verdict item 3): the driver's harness
-    // launches this main with its own -Xmx (91 GiB observed in r10, vs
-    // the tuned 8 GiB in build.sbt/run_main.sh), and big heaps measured
-    // 2.5–7x single-run GC excursions on this box. The stamp already
-    // lands in metaJson; the WARN makes the caveat visible in the bench
-    // tail without opening SURVEY. 10240 leaves headroom over -Xmx8g's
-    // reported maxMemory so the tuned config never false-positives.
-    val heapMb = Runtime.getRuntime.maxMemory / (1024L * 1024L)
-    def heapWarn(): Unit = {
-      if (heapMb > 10240)
-        System.err.println(s"[bench] WARNING: jvm_max_heap_mb=$heapMb " +
-          "exceeds the tuned 8192 — bench numbers are NOT comparable to " +
-          "the committed record (big heaps measured 2.5-7x GC excursions " +
-          "on this box; see SURVEY §9k)")
-      // r10's "big-heap shuffle-byte inflation" was actually THIS knob:
-      // at 32 cores the band-join family writes 2-3x the 4-core bytes —
-      // map-side partial aggregation combines fewer duplicates per task
-      // (measured gradient 20.2/29.2/41.5/58.6 MB at 4/8/16/32 cores,
-      // same plan, zero spill, per-run-uniform). Byte counters only
-      // compare within one parallelism setting.
-      if (cpus != "4")
-        System.err.println(s"[bench] NOTE: cpus=$cpus (committed record " +
-          "is at 4) — shuffle-byte counters scale with map parallelism " +
-          "via partial-agg dilution; compare bytes only within one " +
-          "cpus setting (SURVEY §9k)")
-    }
-    heapWarn()
-    def timedOnce(name: String): RunStat = meter.timed(run(name))
-    // optional comma-separated subset (local iteration / extra scale
-    // points — the driver sets only SPARK_GRAFT_SF_DIR)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val results = headline.filter(SparkEntry.queries.contains)
-      .filter(n => only.forall(_.contains(n)))
-      .map { name =>
+    val results = names.map { name =>
+      val t0 = System.nanoTime()
       val ok = try { run(name); true } // warm-up, untimed
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
         }
-      val (stats, excursions) = if (!ok)
-        (Vector(RunStat(-1.0, 0, 0, 0)), 0)
-      else {
-        val raw = (1 to timedRuns).map(_ => timedOnce(name)).toVector
-        val topped = raw ++ (1 to topUpRuns(raw)).map(_ => timedOnce(name))
-        if (topped.size > raw.size)
-          System.err.println(s"[bench] $name: multi-second row at " +
-            s"$timedRuns runs — topped up to a real median (r12 lesson)")
-        dropExcursions(topped, () => timedOnce(name))
+      System.err.println(
+        f"[bench] $name warm-up ${(System.nanoTime() - t0) / 1e9}%.3f s")
+      val runs = if (!ok) Vector(RunStat(-1.0, 0, 0, 0))
+      else Vector.tabulate(Runs) { i =>
+        val st = meter.timed(run(name))
+        System.err.println(s"[bench] $name run${i + 1} ${st.sec} s " +
+          s"shuffle_write_mb=${st.shufWMb} shuffle_read_mb=${st.shufRMb} " +
+          s"spill_mb=${st.spillMb}")
+        st
       }
-      val times = stats.map(_.sec).sorted
-      // per-query per-run means, comparable across timedRuns settings
-      // and to prior rounds' divide-by-runs numbers
-      def mean(xs: Vector[Double]) =
-        math.round(xs.sum / math.max(xs.size, 1) * 10) / 10.0
-      val shufMb = mean(stats.map(_.shufWMb))
-      val shufRdMb = mean(stats.map(_.shufRMb))
-      val spillMb = mean(stats.map(_.spillMb))
       meter.clear()
-      val (usedMb, freeMb) = storageMb
-      System.err.println(s"[bench] $name times=${times.mkString(",")} " +
-        s"shuffle_write_mb=$shufMb shuffle_read_mb=$shufRdMb " +
-        s"spill_mb=$spillMb excursions=$excursions " +
-        s"storage_used_mb=$usedMb storage_free_mb=$freeMb")
-      // a failed query reports -1 so it can never pass as a fast success
-      (name, times, usedMb, shufMb, shufRdMb, spillMb, stats, excursions)
+      // cached bytes still pinned after clearCache() reveal a leaked persist
+      val storage = spark.sparkContext.getExecutorMemoryStatus.values
+      val usedMb = math.round(storage.map { case (max, free) => max - free }
+        .sum / 1e5) / 10.0
+      val result = QueryResult(name, runs, usedMb)
+      System.err.println(s"[bench] $name times=${result.secs.mkString(",")} " +
+        s"storage_used_mb=$usedMb")
+      result
     }
-    val qs = results.map { case (k, ts, _, _, _, _, _, _) =>
-      "\"" + k + "\":" + ts(ts.size / 2) }.mkString("{", ",", "}")
-    // per-query raw spread [min, median, max] — three numbers that cost
-    // nothing and let an anomalous official record self-diagnose
-    val spreads = results.map { case (k, ts, _, _, _, _, _, _) =>
-      "\"" + k + "\":[" + ts.head + "," + ts(ts.size / 2) + "," + ts.last + "]"
-    }.mkString("{", ",", "}")
-    val leaked = results.map { case (k, _, m, _, _, _, _, _) =>
-      "\"" + k + "\":" + m }.mkString("{", ",", "}")
-    val shuffles = results.map { case (k, _, _, w, _, _, _, _) =>
-      "\"" + k + "\":" + w }.mkString("{", ",", "}")
-    val shuffleReads = results.map { case (k, _, _, _, r, _, _, _) =>
-      "\"" + k + "\":" + r }.mkString("{", ",", "}")
-    val spills = results.map { case (k, _, _, _, _, sp, _, _) =>
-      "\"" + k + "\":" + sp }.mkString("{", ",", "}")
-    // run-aligned per-run arrays [[sec, shuffle_write_mb], ...] + the
-    // discarded-excursion count: the r10 root-cause telemetry — a plan
-    // change inflates EVERY run's bytes, a GC-retry excursion only the
-    // slow run's
-    val perRun = results.map { case (k, _, _, _, _, _, st, _) =>
-      "\"" + k + "\":[" +
-        st.map(s => s"[${s.sec},${s.shufWMb}]").mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val excs = results.map { case (k, _, _, _, _, _, _, ex) =>
-      "\"" + k + "\":" + ex }.mkString("{", ",", "}")
-    val total = results.map { case (_, ts, _, _, _, _, _, _) =>
-      ts(ts.size / 2) }.sum
-    // The driver captures only the last ~2000 chars of this process's
-    // output and parses the JSON line from within that window — round
-    // 6's line, grown past 2000 chars by the spread and storage maps,
-    // fell out of the window and the official record went null. So the
-    // stdout line stays in the compact round-5 shape (≈1.4 KB at 41
-    // queries) and the full diagnostics go to a repo artifact + stderr.
-    // cpus is a raw env string and "*" is a legal value for local[*]:
-    // emit it as a bare number only when it IS one, else as a quoted
-    // JSON string, so BENCH_DETAIL stays parseable for any setting
-    val cpusJson = if (cpus.matches("[0-9]+")) cpus else "\"" + cpus + "\""
-    // --- vs_prior: the noise|signal classification, emitted (not just
-    // narrated) per r12 verdict ask 4. The prior is the COMMITTED
-    // record (read before this run overwrites it); a probe run at a
-    // different sf/cpus is incomparable by the §9k rule and says so.
-    val priorPath = sys.env.getOrElse("SPARK_GRAFT_PRIOR_DETAIL",
-      "/root/repo/BENCH_DETAIL.json")
-    val curSecMap = results.map { case (k, ts, _, _, _, _, _, _) =>
-      k -> ts(ts.size / 2) }.toMap
-    val curBytesMap = results.map { case (k, _, _, w, _, _, _, _) =>
-      k -> w }.toMap
-    val vsPrior: String = try {
-      import org.json4s._
-      val j = org.json4s.jackson.JsonMethods.parse(new String(
-        java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(priorPath)),
-        java.nio.charset.StandardCharsets.UTF_8))
-      val pSf = j \ "sf" match { case JString(s) => s; case _ => "" }
-      val pCpus = j \ "cpus" match {
-        case JInt(i) => i.toString
-        case JString(s) => s
-        case _ => ""
-      }
-      if (pSf != sfDir || pCpus != cpus)
-        s""""vs_prior":{"compared":false,"reason":"prior $pSf@${pCpus}cpus vs $sfDir@${cpus}cpus — bytes/wall only comparable within one config (SURVEY 9k)"}"""
-      else {
-        def dmap(field: String): Map[String, Double] = j \ field match {
-          case JObject(fs) => fs.collect {
-            case (k, JDouble(v)) => k -> v
-            case (k, JInt(v)) => k -> v.toDouble
-          }.toMap
-          case _ => Map.empty
-        }
-        val (cls, pTot, cTot, drifted, nCommon) =
-          classifyVsPrior(dmap("queries"), curSecMap,
-            dmap("shuffle_write_mb"), curBytesMap)
-        if (cls == "incomparable")
-          s""""vs_prior":{"compared":false,"reason":"no common non-failed queries with the prior (disjoint subset or all rows failed)","common_queries":0}"""
-        else {
-          val ratio = if (pTot > 0)
-            math.round(cTot / pTot * 1000) / 1000.0 else -1.0
-          val dj = drifted.map { case (q, p, c) => s""""$q":[$p,$c]""" }
-            .mkString("{", ",", "}")
-          s""""vs_prior":{"compared":true,"common_queries":$nCommon,"prior_total_common":${math.round(pTot * 1000) / 1000.0},"total_common":${math.round(cTot * 1000) / 1000.0},"wall_ratio":$ratio,"drifted_bytes":$dj,"class":"$cls"}"""
-        }
-      }
-    } catch { case e: Throwable =>
-      s""""vs_prior":{"compared":false,"reason":"no parseable prior (${e.getClass.getSimpleName})"}"""
-    }
-    val detail = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs_per_query":$timedRuns,"stat":"median","cpus":$cpusJson,${guard.metaJson},"spread":$spreads,"storage_used_mb_after":$leaked,"shuffle_write_mb":$shuffles,"shuffle_read_mb":$shuffleReads,"spill_mb":$spills,"excursions":$excs,"sec_shufw_runs":$perRun,$vsPrior}"""
-    // overridable path so local/probe chains never clobber the
-    // committed official record (round-8 zombie-chain lesson: a stale
-    // relaunch wrote its late detail over the repo artifact)
+    val (line, detail) = summary(results, sfDir, Sessions.Cpus, guard.metaJson)
+    // overridable path so probe runs never clobber the committed record
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_DETAIL_PATH",
-      "/root/repo/BENCH_DETAIL.json")
+      "BENCH_DETAIL.json")
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(detailPath), detail + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
     System.err.println(s"[bench] detail: $detail")
-    // WARN/NOTE must precede the metric line: r11's trailing heapWarn()
-    // pushed the {"metric":"total"} line out of the driver's 2000-char
-    // tail-capture window and BENCH_r11.json parsed null. The metric
-    // line is the LAST thing this process prints.
-    heapWarn()
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs_per_query":$timedRuns,"stat":"median"}""")
+    println(line) // the last thing this process prints
     spark.stop()
     guard.release()
   }

@@ -36,17 +36,14 @@ object Collimate {
   /** Extension-dispatched scan (reference `index.js:554-572`): `.csv`
     * comma, `.tsv` tab — header row, trimmed cells, no auto-typing —
     * `.json` a whole-file array of objects. A CSV's header is read on the
-    * driver (`GraftBridge.csvHeaderSchema`) and handed to the reader, so
+    * driver (`GraftBridge.readCsv`) and handed to the reader, so
     * the scan starts no Spark job. */
   def read(spark: SparkSession, path: String,
       multiLine: Boolean = false): DataFrame = {
     val lower = path.toLowerCase
-    if (lower.endsWith(".csv") || lower.endsWith(".tsv")) {
-      val csv = csvOptions(path, multiLine)
-      val reader = spark.read.options(csv)
-      GraftBridge.csvHeaderSchema(spark, path, csv)
-        .fold(reader)(s => reader.schema(s)).csv(path)
-    } else if (lower.endsWith(".jsonl") || lower.endsWith(".ndjson"))
+    if (lower.endsWith(".csv") || lower.endsWith(".tsv"))
+      GraftBridge.readCsv(spark, path, csvOptions(path, multiLine))
+    else if (lower.endsWith(".jsonl") || lower.endsWith(".ndjson"))
       // extension beyond the reference: line-delimited JSON is the
       // splittable format — a whole-file array (.json below) must be
       // parsed by a single task

@@ -722,9 +722,9 @@ object Dedup {
     *    (what the exact verify join pays);
     *  - `n_pairs` — the verified answer;
     *  - `inst_per_doc`, `cand_per_doc` — the governed per-doc curves
-    *    (constant-ish ⇒ linear scaling; `graft.Profile <dir>
-    *    containment_candidates` measures them at the 1×/3×/10× scale
-    *    dirs and BENCH_SCALE embeds the curve).
+    *    (constant-ish ⇒ linear scaling; registered as
+    *    `audit_containment_candidates`, so a Verify or Bench run on the
+    *    1×/3×/10× scale dirs measures the curve).
     */
   def containmentCandidateStats(docs: DataFrame, idCol: String,
       shinglesCol: String, threshold: Double): DataFrame = {

@@ -74,9 +74,11 @@ object Graph {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
   }
 
-  /** Fixed-iteration PageRank over an undirected edge list. Every node
-    * appears as a `src` (edges are bidirectional), so there are no
-    * dangling nodes and the rank mass is conserved up to rounding. */
+  /** Fixed-iteration PageRank. On an undirected (bidirectional) edge
+    * list every node appears as a `src`, so there are no dangling nodes
+    * and the rank mass is conserved up to rounding. A directed list may
+    * have sinks (a `dst` that is never a `src`): they receive rank but
+    * pass none on, and both layouts below keep them. */
   def pageRank(edges: DataFrame, damping: Double = Damping,
       iterations: Int = Iterations): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -101,7 +103,8 @@ object Graph {
     // broadcast-hash join + one exchange-FREE hash aggregate:
     //  - contrib = rank/deg needs no join — the rank frame carries its
     //    own `deg`, refreshed each round from max(ddeg) (all edges of a
-    //    dst carry the identical ddeg, so max is exact);
+    //    dst carry the identical ddeg, so max is exact; a sink's ddeg
+    //    is null, which is harmless since a sink has no out-edge);
     //  - groupBy(dst) reuses the edge asset's dst partitioning (a BHJ
     //    preserves the streamed side's partitioning), so the
     //    contribution sum never exchanges.
@@ -118,7 +121,7 @@ object Graph {
       val parts = math.max(4, math.min(64, (m / 120000L).toInt))
       val r = e0
         .join(broadcast(deg.select(col("src").as("dst"),
-          col("deg").as("ddeg"))), "dst")
+          col("deg").as("ddeg"))), Seq("dst"), "left")
         .repartition(parts, col("dst"))
         .persist(lvl)
       r.count()

@@ -433,10 +433,9 @@ object Incremental {
     * resident) band matches PER BATCH ROW — constant occupancy makes it
     * grow only with the Hamming-1 probe count (~log n), never with the
     * corpus. One row: the deployed widths, batch/base sizes, total
-    * candidate instances, and candidates per batch row. Frozen per
-    * round in AUDITS at the verify SFs; `graft.Profile
-    * incr_candidates <dir>` measures the same number at the 1×/3×/10×
-    * scale dirs so the curve is mechanical (r13 ask 1). */
+    * candidate instances, and candidates per batch row. Registered as
+    * `audit_incr_candidates`, so a Verify or Bench run on the
+    * 1×/3×/10× scale dirs measures the curve. */
   def incrCandidateStats(batch: DataFrame, base: DataFrame,
       tables: Int = 24, dim: Int = 64, refN: Long = 5000L): DataFrame = {
     val (nBatch, nBase) = (batch.count(), base.count())

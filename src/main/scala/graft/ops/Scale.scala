@@ -1,8 +1,11 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+import org.apache.spark.util.sketch.BloomFilter
 
 import Q._
 
@@ -60,20 +63,25 @@ object Scale {
     salted.join(expanded, Seq(key, "__salt")).drop("__salt")
   }
 
-  /** Bloom-pruned join: build a Bloom filter over the dim side's keys
-    * driver-side, pre-filter the fact scan with a codegen'd membership
-    * probe, then run the exact join. Semantically invisible (false
-    * positives are removed by the join) but at scale the fact table is
-    * pruned BEFORE its shuffle — the manual, plannable form of Spark's
-    * runtime bloom-filter injection. The dim side must be small enough
-    * to enumerate its keys on the driver (same budget as a broadcast). */
+  /** Bloom-pruned join: build a Bloom filter over the dim side's keys,
+    * pre-filter the fact scan with a membership probe, then run the
+    * exact join. Semantically invisible (false positives are removed by
+    * the join) but at scale the fact table is pruned BEFORE its shuffle.
+    * It is the pair Spark's runtime bloom-filter injection plans —
+    * `BloomFilterAggregate` in a scalar subquery, probed by
+    * `BloomFilterMightContain` (`might_contain`) — made explicit so the
+    * pruning is plannable and testable. The subquery runs when the join
+    * executes; keys are compared as LONG. */
   def bloomPrunedJoin(fact: DataFrame, dim: DataFrame, factKey: String,
       dimKey: String, expectedItems: Long, fpp: Double = 0.03): DataFrame = {
-    val bloom = dim.stat.bloomFilter(dimKey, expectedItems, fpp)
-    val pruned = fact.filter(GraftBridge.column(
-      graft.functions.BloomMightContain(
-        GraftBridge.expression(col(factKey)), bloom)))
-    pruned.join(dim, col(factKey) === col(dimKey))
+    def asLong(c: String) = GraftBridge.expression(col(c).cast(LongType))
+    val build = new BloomFilterAggregate(asLong(dimKey), Literal(expectedItems),
+      Literal(BloomFilter.optimalNumOfBits(expectedItems, fpp)))
+    val bloom = dim.agg(GraftBridge.column(build.toAggregateExpression()))
+      .scalar()
+    fact.filter(GraftBridge.column(BloomFilterMightContain(
+        GraftBridge.expression(bloom), asLong(factKey))))
+      .join(dim, col(factKey) === col(dimKey))
   }
 
   /** In-session registration of the full custom-expression SQL surface

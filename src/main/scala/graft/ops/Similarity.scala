@@ -687,7 +687,7 @@ object Similarity {
     },
     // recall on the PLANTED-CLUSTER fixture (r14): on the shipped
     // near-structureless embeddings this audit was bounded by the
-    // nprobe/k scan fraction (0.58/0.66 frozen in AUDITS_r13) and
+    // nprobe/k scan fraction (recall measured 0.58/0.66) and
     // could not tell a working index from a broken one; on
     // clusteredCorpus a working IVF routes each probe to its planted
     // cluster and recall must clear the ≥ 0.9 floor (OpsSpec)

@@ -157,7 +157,7 @@ object Stats {
     "q_corr_matrix" -> { (s, dir) =>
       val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
       // spread the single-row-group scan: the 14 per-row decimal casts
-      // measured 5.0 s of a 5.2 s query on ONE task (Profile `corr`);
+      // measured 5.0 s of a 5.2 s query on ONE task;
       // decimal sums are order-independent, so the exchange (4 doubles
       // per row — projected before it) cannot change the answer
       val li = Q.spread(t(s, dir, "lineitem").select(cols.map(col): _*))

@@ -3,10 +3,11 @@ package org.apache.spark.sql
 import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.fs.Path
 
+import org.apache.spark.deploy.SparkHadoopUtil
 import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityParser}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.datasources.CodecStreams
+import org.apache.spark.sql.execution.datasources.{CodecStreams, DataSource}
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.util.HadoopFSUtils
@@ -61,12 +62,12 @@ object GraftBridge {
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
 
-  /** The schema `spark.read.options(options).csv(path)` infers with
-    * `header` on and `inferSchema` off — every column a nullable string
-    * named by the header record — computed on the driver with Spark's
-    * own header functions. Spark learns it by running a job over the
-    * scan (`take(1)`); passing this schema to the reader instead starts
-    * no job.
+  /** `spark.read.options(options).csv(path)` with `header` on and
+    * `inferSchema` off — every column a nullable string named by the
+    * header record — but with the schema computed on the driver with
+    * Spark's own header functions. Spark learns it by running a job over
+    * the scan (`take(1)`); handing this schema to the reader instead
+    * starts no job.
     *
     * Input files: `path`'s glob matches, directories listed one level
     * deep, with the names Spark skips (`_`- and `.`-prefixed) left out.
@@ -74,17 +75,24 @@ object GraftBridge {
     * record; if none does, the schema is empty, as Spark infers. One
     * difference: Spark reads the header from its first split, the
     * largest file. The two choices differ only when the files' headers
-    * differ. `None` when the path names no input file, so that Spark's
-    * own read reports it. */
-  def csvHeaderSchema(spark: SparkSession, path: String,
-      options: Map[String, String]): Option[StructType] = {
+    * differ. When the path names no input file, Spark's own read runs
+    * and reports it.
+    *
+    * A glob reaches the reader as its expanded roots, with Spark's
+    * globbing off: Spark would stat the glob string itself as a path
+    * (`FileStreamSink.hasMetadata`) and log a `FileNotFoundException`
+    * for every read. A path without glob characters reaches it
+    * unchanged. */
+  def readCsv(spark: SparkSession, path: String,
+      options: Map[String, String]): DataFrame = {
     val sqlConf = spark.sessionState.conf
     val opts = new CSVOptions(options, sqlConf.csvColumnPruning,
       sqlConf.sessionLocalTimeZone, sqlConf.columnNameOfCorruptRecord)
     val conf = spark.sessionState.newHadoopConfWithOptions(options)
     val glob = new Path(path)
     val fs = glob.getFileSystem(conf)
-    val files = Option(fs.globStatus(glob)).toSeq.flatten
+    val roots = Option(fs.globStatus(glob)).toSeq.flatten
+    val files = roots
       .flatMap(s => if (s.isDirectory) fs.listStatus(s.getPath).toSeq else Seq(s))
       .filter(s => s.isFile && !HadoopFSUtils.shouldFilterOutPathName(s.getPath.getName))
       .map(_.getPath).sortBy(_.toString)
@@ -98,14 +106,21 @@ object GraftBridge {
         finally in.close()
       } else CSVUtils.readHeaderLine(file, opts, conf)
         .map(new CsvParser(opts.asParserSettings).parseLine)
-    Option.when(files.nonEmpty) {
-      files.iterator.map(firstRecord).collectFirst { case Some(r) => r } match {
+    val reader = spark.read.options(options)
+    if (files.isEmpty) reader.csv(path)
+    else {
+      val schema = files.iterator.map(firstRecord)
+        .collectFirst { case Some(r) => r } match {
         case Some(record) if record != null =>
           StructType(CSVUtils.makeSafeHeader(record,
             sqlConf.caseSensitiveAnalysis, opts).toSeq
             .map(StructField(_, StringType, nullable = true)))
         case _ => StructType(Nil)
       }
+      if (SparkHadoopUtil.get.isGlobPath(glob))
+        reader.schema(schema).option(DataSource.GLOB_PATHS_KEY, "false")
+          .csv(roots.map(_.getPath.toString): _*)
+      else reader.schema(schema).csv(path)
     }
   }
 }

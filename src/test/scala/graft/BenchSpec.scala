@@ -1,109 +1,73 @@
 package graft
 
+import org.json4s._
+import org.json4s.jackson.JsonMethods.parse
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The excursion-robust bench stat (r10 verdict item 2), verified by
-  * replaying the recorded r10 driver spreads through it — no Spark
-  * session needed; the policy is a pure function over run stats. */
+/** What `graft.Bench` computes from its runs — query selection and the
+  * two JSON lines — checked as pure functions, without a Spark session. */
 class BenchSpec extends AnyFunSuite {
 
-  private def rs(sec: Double) = Bench.RunStat(sec, 10.0, 10.0, 0.0)
+  private implicit val formats: Formats = DefaultFormats
 
-  test("r10 pagerank spread [5.79, 5.96, 44.2]: the 44.2 s GC " +
-      "excursion is discarded and replaced, median lands on the plan") {
-    val raw = Vector(rs(5.79), rs(5.96), rs(44.2))
-    val (out, n) = Bench.dropExcursions(raw, () => rs(6.1))
-    assert(n == 1)
-    assert(out.map(_.sec).sorted == Vector(5.79, 5.96, 6.1))
+  private def rs(sec: Double, shufW: Double = 1.0) =
+    Bench.RunStat(sec, shufW, 2.0, 0.0)
+
+  private val ok = Bench.QueryResult("q_a",
+    Vector(rs(3.0, 4.0), rs(1.0, 2.0), rs(2.0, 3.0)), 0.5)
+  private val failed = Bench.QueryResult("q_b", Vector(rs(-1.0, 0.0)), 0.0)
+  private val (line, detail) = Bench.summary(Seq(ok, failed),
+    "/data/sf0.1", "4", "\"pid\":7,\"lock_contended\":false")
+
+  private def num(v: JValue): Double = v match {
+    case JDouble(d) => d
+    case JInt(i) => i.toDouble
+    case other => fail(s"not a number: $other")
   }
 
-  test("r10 kcore_ann spread [3.95, 4.85, 14.4] likewise") {
-    val raw = Vector(rs(3.95), rs(4.85), rs(14.4))
-    val (out, n) = Bench.dropExcursions(raw, () => rs(4.2))
-    assert(n == 1)
-    assert(!out.exists(_.sec > 2.5 * out.map(_.sec).min))
+  test("each query reports the median of its timed runs") {
+    assert(ok.median == 2.0)
+    assert(num(parse(line) \ "queries" \ "q_a") == 2.0)
+    assert(num(parse(detail) \ "queries" \ "q_a") == 2.0)
+    assert((parse(detail) \ "spread" \ "q_a").extract[Seq[Double]] ==
+      Seq(1.0, 2.0, 3.0))
   }
 
-  test("tight triple passes through untouched") {
-    val raw = Vector(rs(5.0), rs(5.2), rs(5.1))
-    val (out, n) = Bench.dropExcursions(raw, () => fail("must not re-run"))
-    assert(n == 0 && out == raw)
+  test("a failed query reports -1") {
+    assert(num(parse(line) \ "queries" \ "q_b") == -1.0)
   }
 
-  test("sub-second noise is not an excursion (absolute gap guard): " +
-      "0.6 s vs 0.2 s min is 3x but only 0.4 s apart") {
-    val raw = Vector(rs(0.2), rs(0.3), rs(0.6))
-    val (out, n) = Bench.dropExcursions(raw, () => fail("must not re-run"))
-    assert(n == 0 && out == raw)
+  test("value is the sum of the per-query medians") {
+    assert(num(parse(line) \ "value") == ok.median + failed.median)
+    assert(num(parse(detail) \ "value") == num(parse(line) \ "value"))
   }
 
-  test("a replacement that is itself an excursion is kept once " +
-      "retries are exhausted (evidence over silence)") {
-    val raw = Vector(rs(5.0), rs(5.2), rs(40.0))
-    val (out, n) = Bench.dropExcursions(raw, () => rs(41.0), maxRetries = 3)
-    assert(n == 3)
-    assert(out.map(_.sec).max >= 40.0) // still visible in the spread
+  test("the stdout line and the detail record both parse as JSON") {
+    val l = parse(line)
+    assert(l.asInstanceOf[JObject].obj.map(_._1) == List("metric", "value",
+      "unit", "queries", "sf", "runs_per_query", "stat"))
+    assert(l \ "sf" == JString("/data/sf0.1"))
+    assert(num(l \ "runs_per_query") == Bench.Runs)
+    val d = parse(detail)
+    assert(num(d \ "cpus") == 4.0 && num(d \ "pid") == 7.0)
+    assert(num(d \ "shuffle_write_mb" \ "q_a") == 3.0)
+    assert(num(d \ "storage_used_mb_after" \ "q_a") == 0.5)
+    assert((d \ "sec_shufw_runs" \ "q_a").extract[Seq[Seq[Double]]] ==
+      Seq(Seq(3.0, 4.0), Seq(1.0, 2.0), Seq(2.0, 3.0)))
+    // "*" (local[*]) is a string, not a bare token
+    val (_, star) = Bench.summary(Seq(ok), "/d", "*", "\"pid\":1")
+    assert(parse(star) \ "cpus" == JString("*"))
   }
 
-  test("two excursions in one triple both get replaced within budget") {
-    val raw = Vector(rs(5.0), rs(30.0), rs(40.0))
-    var i = 0
-    val (out, n) = Bench.dropExcursions(raw,
-      () => { i += 1; rs(5.0 + i * 0.1) })
-    assert(n == 2)
-    assert(out.map(_.sec).forall(_ < 6.0))
-  }
-
-  test("median-of-2 top-up (r12 lesson): a multi-second 2-run row gets " +
-      "one extra run; sub-second, 3-run, and failed rows do not") {
-    // the r11 adamic_adar false alarm: [18.6, 18.7]-style pairs report
-    // the slower run as "median" and the excursion policy can't fire
-    assert(Bench.topUpRuns(Vector(rs(13.2), rs(18.6))) == 1)
-    assert(Bench.topUpRuns(Vector(rs(0.4), rs(0.5))) == 0) // sub-second
-    assert(Bench.topUpRuns(Vector(rs(6.0), rs(6.1), rs(6.2))) == 0) // 3 runs
-    assert(Bench.topUpRuns(Vector(rs(-1.0), rs(9.0))) == 0) // failed query
-  }
-
-  test("vs_prior classification (r12 standing rule, mechanized): " +
-      "±15% wall + 1% bytes = noise; either breach = signal") {
-    // the r12 bracket itself: 86.844 vs 83.542 over a shared set with
-    // bytes stable — noise, exactly what the round concluded by hand
-    val pSec = Map("a" -> 40.0, "b" -> 43.5)
-    val cSec = Map("a" -> 42.0, "b" -> 44.8, "new_q" -> 0.7)
-    val pB = Map("a" -> 100.0, "b" -> 50.0)
-    val cB = Map("a" -> 100.4, "b" -> 49.9, "new_q" -> 3.0)
-    val (cls, pTot, cTot, drift, nCommon) =
-      Bench.classifyVsPrior(pSec, cSec, pB, cB)
-    assert(cls == "noise" && drift.isEmpty)
-    // the emitted comparison-set size is the FILTERED set, not the raw
-    // key intersection (r13 advice): new_q is absent from the prior
-    assert(nCommon == 2)
-    // totals are like-for-like: new_q's 0.7 s is NOT in the total
-    assert(pTot == 83.5 && cTot == 86.8)
-    // wall breach alone → signal
-    val (c2, _, _, _, _) = Bench.classifyVsPrior(
-      pSec, Map("a" -> 50.0, "b" -> 50.0), pB, cB)
-    assert(c2 == "signal")
-    // byte drift alone (>1% and >0.3 MB) → signal even with flat wall
-    val (c3, _, _, d3, _) = Bench.classifyVsPrior(
-      pSec, cSec, pB, Map("a" -> 103.0, "b" -> 50.0))
-    assert(c3 == "signal" && d3 == Seq(("a", 100.0, 103.0)))
-    // sub-floor byte wiggle on small rows is NOT drift (0.1 MB
-    // resolution: 0.2 MB on a 5 MB row is 4% but below the floor)
-    val (c4, _, _, d4, _) = Bench.classifyVsPrior(
-      pSec, cSec, Map("a" -> 5.0), Map("a" -> 5.2))
-    assert(c4 == "noise" && d4.isEmpty)
-    // failed rows (sec<0) drop out of the comparison set
-    val (_, p5, _, _, n5) = Bench.classifyVsPrior(
-      Map("a" -> 40.0, "b" -> -1.0), cSec, pB, cB)
-    assert(p5 == 40.0 && n5 == 1)
-    // empty filtered common set (disjoint subset / all failed) is
-    // "incomparable", never a 0/0 "signal" (r13 advice)
-    val (c6, _, _, _, n6) = Bench.classifyVsPrior(
-      Map("x" -> 1.0), cSec, Map.empty, Map.empty)
-    assert(c6 == "incomparable" && n6 == 0)
-    val (c7, _, _, _, _) = Bench.classifyVsPrior(
-      Map("a" -> -1.0), Map("a" -> 5.0), Map.empty, Map.empty)
-    assert(c7 == "incomparable")
+  test("SPARK_GRAFT_BENCH_ONLY takes any registered query and rejects " +
+      "an unknown name") {
+    assert(Bench.selected(None) == Bench.headline)
+    assert(!Bench.headline.contains("audit_incr_candidates"))
+    assert(Bench.selected(Some("audit_incr_candidates, graph_pagerank")) ==
+      Seq("audit_incr_candidates", "graph_pagerank"))
+    val e = intercept[IllegalArgumentException](
+      Bench.selected(Some("graph_pagerank,no_such_query")))
+    assert(e.getMessage.contains("no_such_query"))
+    intercept[IllegalArgumentException](Bench.selected(Some(" , ")))
   }
 }

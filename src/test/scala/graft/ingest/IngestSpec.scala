@@ -153,6 +153,26 @@ class IngestSpec extends AnyFunSuite with SparkSuite {
     assert(s.fields.head.distinct == 150)
   }
 
+  /** Messages `FileStreamSink` logs while `body` runs. */
+  def sinkWarnings(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val app = new AbstractAppender("sink-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName.endsWith(".FileStreamSink"))
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    app.start()
+    root.addAppender(app)
+    try body finally { root.removeAppender(app); app.stop() }
+    seen.toArray.toSeq.map(_.toString)
+  }
+
   /** Spark jobs started while `body` runs. */
   def jobsIn(body: => Unit): Int = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -227,6 +247,10 @@ class IngestSpec extends AnyFunSuite with SparkSuite {
     assert(jobsIn(Collimate.read(spark, glob)) == 0)
     assert(jobsIn(Collimate.read(spark, fixture("types_basic.csv"),
       multiLine = true)) == 0)
+    // the glob reaches Spark expanded: Spark stats a glob string as a
+    // path and logs a FileNotFoundException with its stack trace
+    assert(sinkWarnings(spark.read.csv(glob)).nonEmpty)
+    assert(sinkWarnings(Collimate.read(spark, glob).count()).isEmpty)
     graft.Util.rmrf(dir.toFile)
   }
 

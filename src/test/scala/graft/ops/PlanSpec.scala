@@ -81,8 +81,19 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("bloom membership filter sits on the fact scan before the join") {
-    val plan = formatted(q("q_bloom_pruned_join"))
-    assert(plan.contains("graft_bloom_contains"), plan)
+    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join}
+    val df = q("q_bloom_pruned_join")
+    val plan = formatted(df)
+    assert(plan.contains("might_contain"), plan)
+    val joins = df.queryExecution.optimizedPlan.collect { case j: Join => j }
+    assert(joins.size == 1, plan)
+    // the probe filters the fact (left) input, below the join
+    val probes = joins.head.left.collect {
+      case f: Filter if f.condition.exists(_.isInstanceOf[BloomFilterMightContain]) => f
+    }
+    assert(probes.size == 1, plan)
+    assert(probes.head.collectFirst { case j: Join => j }.isEmpty, plan)
   }
 
   test("LSH bucket cap: no oversized buckets on the test corpus") {

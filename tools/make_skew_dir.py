@@ -8,8 +8,18 @@ distinct while forcing doc_id % 11 <= 2 for ALL rows — the rawUrls
 derivation then hangs every host under `.example.com`, so ONE
 registrable domain owns 100% of the corpus. Row count, text, source,
 and all other columns are unchanged; only the id-driven URL derivation
-collapses. Used by `graft.Profile quota_skew` to measure that the
-WindowGroupLimit quota plan stays bounded under a mega-domain.
+collapses. It measures that the WindowGroupLimit quota plan stays
+bounded under a mega-domain: time `pipeline_domain_quota_etld` on the
+skewed dir twice with `graft.Bench`, once as is and once with the
+rewrite excluded (SparkConf reads `spark.*` JVM system properties), and
+compare the shuffle_write_mb of the two runs:
+
+    python3 tools/make_skew_dir.py <sfDir> /tmp/skew
+    export SPARK_GRAFT_SF_DIR=/tmp/skew
+    export SPARK_GRAFT_BENCH_ONLY=pipeline_domain_quota_etld
+    SPARK_GRAFT_DETAIL_PATH=/tmp/skew_on.json tools/run_main.sh graft.Bench
+    export JAVA_TOOL_OPTIONS=-Dspark.sql.optimizer.excludedRules=org.apache.spark.sql.catalyst.optimizer.InferWindowGroupLimit
+    SPARK_GRAFT_DETAIL_PATH=/tmp/skew_off.json tools/run_main.sh graft.Bench
 """
 import os
 import sys
