@@ -1,9 +1,12 @@
 package graft.functions
 
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.{array, col, explode, lit,
+  posexplode, transform, when}
 import org.apache.spark.sql.types._
 
 /** All `tables` random-hyperplane LSH bucket ids of a DOUBLE vector in
@@ -58,6 +61,38 @@ case class LshBuckets(child: Expression, tables: Int, bits: Int, dim: Int)
 }
 
 object LshBuckets {
+
+  /** Band rows of `df`: its columns plus, per table, `tb` (the table)
+    * and `bk` (the bucket id of column `vec`). Mixed widths
+    * ([[graft.ops.Dedup.adaptiveWidths]]): tables tb < `kHigh` hash at
+    * bits+1, the rest at `bits` — ONE evaluation at the wide width,
+    * narrow tables mask off the top bit. Valid because hyperplane
+    * (tb, b, i) is width-independent, so the bit-b bucket IS the
+    * bit-(b+1) bucket's low b bits (locked in IncrementalSpec). */
+  def bands(df: DataFrame, vec: String, tables: Int, bits: Int, dim: Int,
+      kHigh: Int = 0): DataFrame = {
+    val bk =
+      if (kHigh > 0) when(col("pos") < kHigh, col("col"))
+        .otherwise(col("col").bitwiseAND(lit((1 << bits) - 1)))
+      else col("col")
+    df.select(col("*"), posexplode(GraftBridge.column(LshBuckets(
+        GraftBridge.expression(col(vec)), tables,
+        if (kHigh > 0) bits + 1 else bits, dim))))
+      .select(df.columns.map(col) :+ col("pos").as("tb") :+ bk.as("bk"): _*)
+  }
+
+  /** Multiprobe of [[bands]] rows: each row's bucket plus its Hamming-1
+    * neighbors at its table's width (mask 0 = self) — wide tables
+    * (tb < kHigh) flip any of bits+1 positions, narrow ones any of
+    * `bits`. */
+  def probes(bands: DataFrame, bits: Int, kHigh: Int = 0): DataFrame = {
+    def masks(b: Int) = array((0 +: (0 until b).map(1 << _)).map(lit(_)): _*)
+    val m =
+      if (kHigh == 0) masks(bits)
+      else when(col("tb") < kHigh, masks(bits + 1)).otherwise(masks(bits))
+    bands.withColumn("bk",
+      explode(transform(m, x => col("bk").bitwiseXOR(x))))
+  }
 
   /** Same formula as Similarity.hyperplanes, flattened. */
   def planes(tables: Int, bits: Int, dim: Int): Array[Double] = {

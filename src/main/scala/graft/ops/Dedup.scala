@@ -196,8 +196,8 @@ object Dedup {
     * (comp := comp's comp, i.e. path halving) turns plain propagation's
     * O(diameter) rounds into O(log n), so a path graph of a million
     * near-dup docs converges in ~20 rounds, not a million. Two shuffles
-    * per round, no driver-side graph state. `localCheckpoint` truncates
-    * the iterative lineage (on a real cluster use a checkpoint dir for
+    * per round, no driver-side graph state; [[Fixpoint]] truncates the
+    * iterative lineage (on a real cluster use a checkpoint dir for
     * fault tolerance). Raises if `maxIters` rounds don't converge —
     * returning silently-split clusters would corrupt the downstream
     * keep-best selection. Returns (id, comp) with comp = the component's
@@ -211,19 +211,21 @@ object Dedup {
         col(aCol).cast(LongType).as("dst")))
       .distinct()
       .persist(lvl)
-    var labels = edges.select(col("src").as("id")).distinct()
+    val labels0 = edges.select(col("src").as("id")).distinct()
       .withColumn("comp", col("id"))
       .localCheckpoint()
-    if (labels.isEmpty) {
-      // no near-dup pairs at this threshold: every doc is a singleton.
-      // (Also dodges the NULL that sum-over-zero-rows yields below.)
-      edges.unpersist(blocking = false)
-      return labels
-    }
-    var prevSum = labels.agg(sum(col("comp"))).head().getLong(0)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
+    // no pairs (sum over zero rows is NULL, read as 0): converges at once
+    def compSum(df: DataFrame): Long =
+      df.agg(coalesce(sum(col("comp")), lit(0L))).head().getLong(0)
+    var prevSum = compSum(labels0)
+    // convergence is tested on every state: [[Fixpoint]]'s every = 1
+    val Fixpoint.Result(labels, converged) = Fixpoint.run(labels0, maxIters,
+        assets = Seq(edges, labels0), until = { next =>
+          val s = compSum(next)
+          val same = s == prevSum // min-propagation is monotone per node
+          prevSum = s
+          same
+        }) { (labels, _) =>
       val nbrMin = edges
         .join(labels.select(col("id").as("dst"), col("comp").as("nbr_comp")),
           "dst")
@@ -236,18 +238,11 @@ object Dedup {
       // pointer jump: comp := min(comp, comp(comp)). Every comp value is
       // a node id (labels start as id and only ever adopt other nodes'
       // labels), so the inner self-join matches every row.
-      val next = prop
+      prop
         .join(prop.select(col("id").as("cid"), col("comp").as("ccomp")),
           prop("comp") === col("cid"))
         .select(col("id"), least(col("comp"), col("ccomp")).as("comp"))
-        .localCheckpoint()
-      val s = next.agg(sum(col("comp"))).head().getLong(0)
-      converged = s == prevSum // min-propagation is monotone per node
-      prevSum = s
-      labels = next
-      iter += 1
     }
-    edges.unpersist(blocking = false)
     if (!converged) throw new IllegalStateException(
       s"components() did not converge in $maxIters rounds — with pointer " +
         "jumping this needs a component of diameter > 2^" + maxIters +
@@ -427,8 +422,7 @@ object Dedup {
       vecCol: String, threshold: Double, tables: Int, bits: Int,
       dim: Int, multiprobe: Boolean = false,
       kHigh: Int = 0): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.GraftBridge
-    import graft.functions.Vectors
+    import graft.functions.{LshBuckets, Vectors}
     val e = corpus.select(col(idCol).cast(LongType).as("id"),
         Vectors.toDouble(col(vecCol)).as("v"))
       .withColumn("nrm", Vectors.norm(col("v")))
@@ -446,23 +440,8 @@ object Dedup {
     // the cosine for duplicate candidates (pure map-side CPU), but no
     // candidate-sized frame is ever exchanged or hash-deduped — the
     // scarce resource at 100 TB is the shuffle, not the FLOPs.
-    // Mixed widths ([[adaptiveWidths]]): tables tb < kHigh hash at
-    // bits+1, the rest at bits — ONE LshBuckets evaluation at the wide
-    // width, narrow tables mask off the top bit (valid because the
-    // hyperplane (tb, b, i) is width-independent, so a bit-b bucket IS
-    // the bit-(b+1) bucket's low b bits; the same invariant the
-    // incremental index relies on, spec-locked in IncrementalSpec).
-    val wBits = if (kHigh > 0) bits + 1 else bits
-    val bkCol =
-      if (kHigh > 0)
-        when(col("pos") < kHigh, col("col"))
-          .otherwise(col("col").bitwiseAND(lit((1 << bits) - 1)))
-      else col("col")
-    val banded = e.select(col("id"), col("v"), col("nrm"),
-        posexplode(GraftBridge.column(graft.functions.LshBuckets(
-          GraftBridge.expression(col("v")), tables, wBits, dim))))
-      .select(col("id"), col("v"), col("nrm"),
-        col("pos").as("tb"), bkCol.as("bk"))
+    // Mixed widths ([[adaptiveWidths]]): see LshBuckets.bands.
+    val banded = LshBuckets.bands(e, "v", tables, bits, dim, kHigh)
     // multiprobe: ONE side of the self-join also probes the `bits`
     // buckets at Hamming distance 1 (mask 0 = self). With the a.id <
     // b.id filter this is symmetric-enough: pair (x, y) is found iff
@@ -470,19 +449,8 @@ object Dedup {
     // probability rises from p^b to p^b + b·p^(b−1)(1−p) — at tight
     // thresholds that buys ~2.5× per-table recall for probe-side rows
     // only, letting `tables` shrink ~4× for the same pair recall.
-    val probeSide = if (!multiprobe) banded else {
-      // Hamming-1 neighbors of the table's OWN width: wide tables
-      // (tb < kHigh) flip any of bits+1 positions, narrow ones any of
-      // `bits` — mirrors Incremental.multiprobeBands.
-      def maskArr(b: Int) =
-        array((0 +: (0 until b).map(1 << _)).map(lit(_)): _*)
-      val masks =
-        if (kHigh == 0) maskArr(bits)
-        else when(col("tb") < kHigh, maskArr(bits + 1))
-          .otherwise(maskArr(bits))
-      banded.select(col("id"), col("v"), col("nrm"), col("tb"),
-        explode(transform(masks, m => col("bk").bitwiseXOR(m))).as("bk"))
-    }
+    val probeSide =
+      if (multiprobe) LshBuckets.probes(banded, bits, kHigh) else banded
     // hint("merge"): BOTH sides of the band join are corpus-derived —
     // never a dim table — and Spark's size estimate of the lazily-
     // cached subtree routinely lands under the broadcast threshold.

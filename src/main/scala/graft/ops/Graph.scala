@@ -17,13 +17,12 @@ import Q._
   * ⋈ deg builds the per-node contribution, DECIMAL-cast once per node)
   * followed by one EDGE-sized equi-join + `groupBy(dst)` whose partial
   * aggregation combines contributions map-side — the edge-sized shuffle
-  * is the only one that scales with data. Ranks are `localCheckpoint`ed
-  * every fourth iteration so the plan never compounds (the same
-  * lineage-truncation stance as [[Dedup.components]]); the checkpoint
-  * is rank-frame-sized (|nodes|), not edge-sized. The two-long-wide
-  * edge list is persisted once and reused by all iterations — at 100 TB
-  * that is the dominant asset and it never re-shuffles after the first
-  * hash partition on `src`.
+  * is the only one that scales with data. The rank frame is the
+  * [[Fixpoint]] state, so its checkpoints are rank-frame-sized
+  * (|nodes|), not edge-sized. The two-long-wide edge list is persisted
+  * once and reused by all iterations — at 100 TB that is the dominant
+  * asset and it never re-shuffles after the first hash partition on
+  * `src`.
   *
   * Determinism: per-iteration contributions are summed with the
   * [[Q.dsum]] DECIMAL trick (order-independent), and each iteration's
@@ -119,31 +118,24 @@ object Graph {
       // balances the two.
       val m = e0.count()
       val parts = math.max(4, math.min(64, (m / 120000L).toInt))
-      val r = e0
-        .join(broadcast(deg.select(col("src").as("dst"),
+      e0.join(broadcast(deg.select(col("src").as("dst"),
           col("deg").as("ddeg"))), Seq("dst"), "left")
         .repartition(parts, col("dst"))
-        .persist(lvl)
-      r.count()
-      e0.unpersist(blocking = false)
-      r
-    } else {
-      val r = e0.repartition(col("src")).sortWithinPartitions("src")
-        .persist(lvl)
-      r.count()
-      e0.unpersist(blocking = false)
-      r
-    }
+    } else e0.repartition(col("src")).sortWithinPartitions("src")
+    ed.persist(lvl).count()
+    e0.unpersist(blocking = false)
     val teleport = (1.0 - damping) / n
-    var ranks =
+    val init =
       if (small) deg.select(col("src").as("node"),
         round(lit(1.0 / n), 12).as("rank"), col("deg"))
       else deg.select(col("src").as("node"),
         round(lit(1.0 / n), 12).as("rank"))
-    for (i <- 1 to iterations) {
+    // node-sized state, read once per round: [[Fixpoint]]'s every = 4
+    Fixpoint.run(init, iterations, every = 4,
+        assets = Seq(ed, deg)) { (ranks, _) =>
       // scale-12 cast: same rounding as a wider decimal, but the
       // sum accumulator stays in compact-long range (sums < 10^6)
-      val next = if (small) {
+      if (small) {
         val contrib = ranks.select(col("node"),
           (col("rank") / col("deg")).cast(DecimalType(18, 12))
             .as("contrib"))
@@ -165,14 +157,7 @@ object Graph {
             sum(col("contrib")).cast(DoubleType)).as("rr"))
           .select(col("dst").as("node"), round(col("rr"), 12).as("rank"))
       }
-      // lineage truncation every 4th round keeps the analyzed plan
-      // bounded without paying a materialization per iteration
-      ranks = if (i % 4 == 0 || i == iterations) next.localCheckpoint()
-      else next
-    }
-    ed.unpersist(blocking = false)
-    deg.unpersist(blocking = false)
-    ranks.select(col("node"), col("rank"))
+    }.state.select(col("node"), col("rank"))
   }
 
   /** Personalized PageRank: identical iteration to [[pageRank]], but
@@ -198,15 +183,17 @@ object Graph {
       .localCheckpoint()
     // seed-uniform start vector (any start converges; this one makes
     // early iterations already seed-centric)
-    var ranks = teleport.select(col("node"),
+    val init = teleport.select(col("node"),
       round(when(col("tp") > 0, lit(1.0 / k)).otherwise(lit(0.0)), 12)
         .as("rank"))
-    for (i <- 1 to iterations) {
+    // the pageRank cadence; sd and teleport are setup checkpoints
+    Fixpoint.run(init, iterations, every = 4,
+        assets = Seq(e0, deg, sd, teleport)) { (ranks, _) =>
       val contrib = ranks.join(deg, ranks("node") === deg("src"))
         .select(col("node"),
           (col("rank") / col("deg")).cast(DecimalType(18, 12))
             .as("contrib"))
-      val next = e0.join(contrib, e0("src") === contrib("node"))
+      e0.join(contrib, e0("src") === contrib("node"))
         .groupBy(col("dst"))
         .agg((lit(damping) *
           sum(col("contrib")).cast(DoubleType)).as("walk"))
@@ -215,12 +202,7 @@ object Graph {
         .select(col("node"),
           round(col("tp") + coalesce(col("walk"), lit(0.0)), 12)
             .as("rank"))
-      ranks = if (i % 4 == 0 || i == iterations) next.localCheckpoint()
-      else next
-    }
-    e0.unpersist(blocking = false)
-    deg.unpersist(blocking = false)
-    ranks
+    }.state
   }
 
   /** DuckDB mirror of [[personalizedPageRank]]: chained CTEs from the
@@ -349,9 +331,8 @@ object Graph {
     * `nodes` = (node, seed_label nullable); `pairs` = undirected
     * unique (a, b) edges. Each iteration is one edge-sized equi-join +
     * a majority aggregate with map-side partial counts + a per-node
-    * bounded window — the same shuffle shape as a PageRank round, with
-    * the same every-4th-iteration localCheckpoint so arbitrary
-    * `iterations` keeps the analyzed plan bounded. */
+    * bounded window — the same shuffle shape and the same [[Fixpoint]]
+    * cadence as a PageRank round. */
   def labelPropagation(nodes: DataFrame, pairs: DataFrame,
       aCol: String, bCol: String, iterations: Int): DataFrame = {
     // persist the edge frame: every iteration joins it, and the pair
@@ -366,8 +347,9 @@ object Graph {
     val ed = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = nodes.withColumn("label", col("seed_label"))
-    for (i <- 1 to iterations) {
+    // node-sized state, read once per round: [[Fixpoint]]'s every = 4
+    Fixpoint.run(nodes.withColumn("label", col("seed_label")), iterations,
+        every = 4, assets = Seq(ed)) { (labels, _) =>
       val votes = ed
         .join(labels.select(col("node").as("src"), col("label").as("nl")),
           "src")
@@ -378,18 +360,11 @@ object Graph {
       val maj = votes.withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("dst").as("node"), col("nl").as("mlabel"))
-      val next = labels.join(maj, Seq("node"), "left")
+      labels.join(maj, Seq("node"), "left")
         .select(col("node"), col("seed_label"),
           when(col("seed_label").isNotNull, col("seed_label"))
             .otherwise(coalesce(col("mlabel"), col("label"))).as("label"))
-      // lineage truncation every 4th round (and on the last, so the
-      // edge cache can be released below without re-executing the pair
-      // plan) — the pageRank cadence, node-frame-sized checkpoints
-      labels = if (i % 4 == 0 || i == iterations) next.localCheckpoint()
-      else next
-    }
-    ed.unpersist(blocking = false)
-    labels.select(col("node"), col("label"),
+    }.state.select(col("node"), col("label"),
       col("seed_label").isNotNull.as("is_seed"))
   }
 
@@ -440,60 +415,40 @@ object Graph {
     * node cap) — the same shuffle shape as a PageRank round, with the
     * edge list SHRINKING monotonically. `rounds` is fixed so the
     * DuckDB oracle (same loop, chained CTEs) matches per-round even
-    * short of the fixpoint; in-loop localCheckpoint every 4th round
-    * keeps arbitrary depths plan-bounded (the lesson the round-5
-    * verdict taught labelPropagation). */
+    * short of the fixpoint; [[Fixpoint]] keeps arbitrary depths
+    * plan-bounded. */
   def kCore(pairs: DataFrame, idA: String, idB: String, k: Int,
       rounds: Int): DataFrame = {
-    // Loop state is the shrinking edge list, localCheckpointed EVERY
-    // round and explicitly released one round later. Three inferior
-    // formulations were measured at the 3× probe before landing here:
-    // every-4th-round checkpoints re-derived the expensive LSH pair
-    // source multiplicatively between checkpoints (each round
-    // references its predecessor three times → 36 s); plain persist
-    // instead of checkpoint kept blocks freeable but left the logical
-    // plan 3^rounds-deep (explain/analysis OOMs); node-set-only loop
-    // state kept memory flat but re-scanned the FULL round-0 edge list
-    // every round (50 s — the peel exists precisely because the edge
-    // list shrinks). Per-round checkpoints truncate lineage, the
-    // shrinking scans stay, and GraftBridge.unpersistCheckpoint frees
-    // each round's blocks as soon as its child is materialized, so at
-    // most two edge frames are ever pinned.
+    // Loop state is the shrinking edge list: node-set-only state
+    // re-scanned the FULL round-0 edge list every round (50 s at the 3×
+    // probe — the peel exists precisely because the edge list shrinks).
     import org.apache.spark.sql.GraftBridge
-    // (A src-partitioned peel state was tried in r16: localCheckpoint
-    // does NOT carry the physical partitioning — the round-2 plan dump
-    // shows `Scan ExistingRDD … UnknownPartitioning` — so the entry
-    // repartition bought nothing and was dropped. The exchange-free
-    // treatment that works for pageRank's persist()-cached edge asset
-    // is unavailable to checkpoint-based loop state.)
-    var e = pairs.select(explode(array(
+    val e0 = pairs.select(explode(array(
         struct(col(idA).as("src"), col(idB).as("dst")),
         struct(col(idB).as("src"), col(idA).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .localCheckpoint()
-    // `keep` is node-sized (≤ |e| rows), but a checkpointed frame has
-    // no stats, so the planner would default the survivor joins to
-    // sort-merge — re-sorting the edge list twice per round. Broadcast
-    // is the right plan whenever the node set is broadcast-bounded;
-    // |e| at entry bounds every round's node count (the peel only
-    // shrinks), so one count of the already-materialized checkpoint
-    // decides for all rounds, same cap stance as pageRank.
-    val hintB = e.count() <= BroadcastNodesCap
-    def maybeB(df: DataFrame): DataFrame = if (hintB) broadcast(df) else df
-    for (r <- 1 to rounds) {
+    // `keep` is node-sized, but a checkpointed frame has no stats, so
+    // the planner would default the survivor joins to sort-merge —
+    // re-sorting the edge list twice per round. Broadcast whenever the
+    // node set fits the node cap: every node of this bidirectional list
+    // is the src of an edge, so the edge count bounds every round's
+    // node count (the peel only shrinks) — one conservative count.
+    val nodeBound = e0.count()
+    def maybeB(df: DataFrame): DataFrame =
+      if (nodeBound <= BroadcastNodesCap) broadcast(df) else df
+    // each round reads the edge list three times: [[Fixpoint]]'s every = 1
+    val e = Fixpoint.run(e0, rounds, assets = Seq(e0)) { (e, _) =>
       val keep = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("src"))
-      val next = e.join(maybeB(keep), Seq("src"))
+      e.join(maybeB(keep), Seq("src"))
         .join(maybeB(keep.withColumnRenamed("src", "dst")), Seq("dst"))
-      val ckpt = next.localCheckpoint()
-      GraftBridge.unpersistCheckpoint(e)
-      e = ckpt
-    }
+    }.state
     val out = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .select(col("src").as("node"), col("deg"))
       .localCheckpoint()
-    GraftBridge.unpersistCheckpoint(e)
+    GraftBridge.release(e)
     out
   }
 
@@ -504,11 +459,11 @@ object Graph {
     * joins the edge list against ONLY the nodes first reached last
     * round (never the whole reached set), so per-round work tracks the
     * frontier size; the reached set grows monotonically and the
-    * `left_anti` novelty check is a node-sized join. Frontiers are
-    * localCheckpointed — the anti-join re-reads materialized rows, not
-    * a growing plan. Same pair-source-agnostic stance as
-    * [[labelPropagation]]/[[kCore]]: feed it blocked fuzzy pairs, LSH
-    * band pairs, or exact anchors.
+    * `left_anti` novelty check is a node-sized join. The reached set is
+    * checkpointed every round ([[Fixpoint]]) — the anti-join re-reads
+    * materialized rows, not a growing plan. Same pair-source-agnostic
+    * stance as [[labelPropagation]]/[[kCore]]: feed it blocked fuzzy
+    * pairs, LSH band pairs, or exact anchors.
     *
     * `seeds` = (node); unreached nodes are absent from the output. */
   def bfsHops(pairs: DataFrame, aCol: String, bCol: String,
@@ -524,21 +479,18 @@ object Graph {
           col(aCol).cast(LongType).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var dist = seeds.select(col("node").cast(LongType).as("node"),
+    val seeds0 = seeds.select(col("node").cast(LongType).as("node"),
       lit(0).as("dist")).localCheckpoint()
-    var frontier = dist
-    for (r <- 1 to rounds) {
+    // reached set with its hop, read twice a round: [[Fixpoint]]'s every = 1
+    Fixpoint.run(seeds0, rounds, assets = Seq(ed, seeds0)) { (dist, r) =>
       val novel = ed
-        .join(frontier.select(col("node").as("src")), "src")
+        .join(dist.filter(col("dist") === r - 1)
+          .select(col("node").as("src")), "src")
         .select(col("dst").as("node")).distinct()
         .join(dist, Seq("node"), "left_anti")
         .select(col("node"), lit(r).as("dist"))
-        .localCheckpoint()
-      dist = dist.union(novel)
-      frontier = novel
-    }
-    ed.unpersist(blocking = false)
-    dist
+      dist.union(novel)
+    }.state
   }
 
   val BfsRounds = 3

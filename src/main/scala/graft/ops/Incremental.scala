@@ -307,26 +307,11 @@ object Incremental {
     * survivors' bands nightly); here it is derived from the md5 split.
     * One row per (table, vector): bytes proportional to tables·|corpus|,
     * never the vectors themselves.
-    *
-    * Mixed widths ([[Dedup.adaptiveWidths]]): tables tb < `kHigh` hash
-    * at bits+1, the rest at `bits`. ONE LshBuckets evaluation at the
-    * wide width, narrow tables mask off the top bit — valid because
-    * hyperplane (tb, b, i) is width-independent, so the bit-b bucket IS
-    * the bit-(b+1) bucket's low b bits (locked in IncrementalSpec). */
+    * Mixed widths: see [[graft.functions.LshBuckets.bands]]. */
   def embeddingBandIndex(vecs: DataFrame, tables: Int, bits: Int,
-      dim: Int, kHigh: Int = 0): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    val w = if (kHigh > 0) bits + 1 else bits
-    val raw = vecs.select(col("id"), posexplode(GraftBridge.column(
-        graft.functions.LshBuckets(
-          GraftBridge.expression(col("v")), tables, w, dim))))
-    val bk =
-      if (kHigh > 0)
-        when(col("pos") < kHigh, col("col"))
-          .otherwise(col("col").bitwiseAND(lit((1 << bits) - 1)))
-      else col("col")
-    raw.select(col("pos").as("tb"), bk.as("bk"), col("id"))
-  }
+      dim: Int, kHigh: Int = 0): DataFrame =
+    graft.functions.LshBuckets.bands(vecs.select("id", "v"), "v", tables,
+      bits, dim, kHigh).select("tb", "bk", "id")
 
   /** Semantic incremental dedup: batch vectors with a cosine ≥ τ
     * partner in the base corpus, found via the persisted band index and
@@ -362,22 +347,12 @@ object Incremental {
     * the streaming handler below maintains one): multiprobe batch-side
     * bucket expansion, (table, bucket) equi-join, exact-cosine verify
     * against `base` vectors joined by candidate id. */
-  /** Batch-side multiprobe band rows (id_batch, tb, bk): each band row
-    * expands to its bucket plus the Hamming-1 neighbors of its TABLE'S
-    * width — wide tables (tb < kHigh) flip any of bits+1 positions,
-    * narrow ones any of `bits`. */
+  /** Batch-side multiprobe band rows (tb, bk, id_batch). */
   private def multiprobeBands(batch: DataFrame, tables: Int, bits: Int,
-      dim: Int, kHigh: Int): DataFrame = {
-    def maskArr(b: Int) =
-      array((0 +: (0 until b).map(1 << _)).map(lit(_)): _*)
-    val masks =
-      if (kHigh == 0) maskArr(bits)
-      else when(col("tb") < kHigh, maskArr(bits + 1)).otherwise(maskArr(bits))
-    embeddingBandIndex(batch, tables, bits, dim, kHigh)
-      .withColumnRenamed("id", "id_batch")
-      .select(col("id_batch"), col("tb"),
-        explode(transform(masks, m => col("bk").bitwiseXOR(m))).as("bk"))
-  }
+      dim: Int, kHigh: Int): DataFrame =
+    graft.functions.LshBuckets.probes(
+      embeddingBandIndex(batch, tables, bits, dim, kHigh)
+        .withColumnRenamed("id", "id_batch"), bits, kHigh)
 
   def probeEmbeddingIndex(batch: DataFrame, index: DataFrame,
       base: DataFrame, threshold: Double, tables: Int, bits: Int,

@@ -85,22 +85,14 @@ object Similarity {
   def lshTopK(corpus: DataFrame, probes: DataFrame, k: Int,
       tables: Int = Tables, bits: Int = Bits, dim: Int = 64,
       multiprobe: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
+    import graft.functions.LshBuckets
     // dim must equal the embedding dimensionality: shorter hyperplanes
     // would silently bucket on a prefix of the vector
-    def banded(df: DataFrame, id: String, vec: String): DataFrame =
-      df.select(col(id), col(vec), posexplode(GraftBridge.column(
-          graft.functions.LshBuckets(
-            GraftBridge.expression(col(vec)), tables, bits, dim))))
-        .select(col(id), col(vec), col("pos").as("tb"), col("col").as("bk"))
-    val c = banded(corpus, "vec_id", "v")
-    val p0 = banded(probes, "query_id", "qv")
-    val p = if (!multiprobe) p0 else {
-      // probe bucket + its `bits` Hamming-1 neighbors (mask 0 = self)
-      val masks = array((0 +: (0 until bits).map(1 << _)).map(lit(_)): _*)
-      p0.select(col("query_id"), col("qv"), col("tb"),
-        explode(transform(masks, m => col("bk").bitwiseXOR(m))).as("bk"))
-    }
+    val c = LshBuckets.bands(corpus.select("vec_id", "v"), "v", tables,
+      bits, dim)
+    val p0 = LshBuckets.bands(probes.select("query_id", "qv"), "qv",
+      tables, bits, dim)
+    val p = if (multiprobe) LshBuckets.probes(p0, bits) else p0
     val cands = p.join(c, Seq("tb", "bk"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("qv"), col("vec_id"), col("v"))

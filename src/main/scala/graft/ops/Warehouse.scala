@@ -652,7 +652,7 @@ object Warehouse {
     // this state to converting". ONE data pass builds the matrix
     // (the events_transition_matrix reduction); the k-step recursion
     // then runs entirely on the |types|²-row frame — 8 joins over
-    // metadata, localCheckpointed per step so the plan stays flat.
+    // metadata, one [[Fixpoint]] checkpoint per step.
     // Per-step products are decimal-quantized before summing (≤|types|
     // terms), so the recursion is bit-identical to the oracle's
     // chained-CTE replay.
@@ -670,7 +670,7 @@ object Warehouse {
         .localCheckpoint() // tiny; reused by all 8 recursion steps
       val types = trans.select(col("a").as("t"))
         .union(trans.select(col("b"))).distinct().localCheckpoint()
-      def step(pv: DataFrame): DataFrame = {
+      def step(pv: DataFrame, r: Int): DataFrame = {
         val nxt = trans
           .join(pv.select(col("t").as("b"), col("p").as("pb")), Seq("b"))
           .groupBy(col("a"))
@@ -680,15 +680,15 @@ object Warehouse {
           .select(col("t"),
             when(col("t") === "purchase", lit(1.0))
               .otherwise(coalesce(col("sp"), lit(0.0))).as("p"))
-          .localCheckpoint()
       }
       val p0 = types.select(col("t"),
         when(col("t") === "purchase", lit(1.0)).otherwise(lit(0.0))
           .as("p"))
-      val snaps = Iterator.iterate(p0)(step).slice(1, 9).zipWithIndex
-        .collect { case (df, i) if Seq(0, 3, 7).contains(i) => (i + 1, df) }
-        .toSeq
-      snaps.map { case (k, df) =>
+      // each snapshot is the next run's `init`, which a run never releases
+      val p1 = Fixpoint.run(p0, 1)(step).state
+      val p4 = Fixpoint.run(p1, 3)(step).state
+      val p8 = Fixpoint.run(p4, 4, assets = Seq(trans, types))(step).state
+      Seq(1 -> p1, 4 -> p4, 8 -> p8).map { case (k, df) =>
           df.select(col("t"), round(col("p"), 6).as(s"p$k")) }
         .reduce((l, r) => l.join(r, Seq("t")))
         .select(col("t").as("event_type"), col("p1"), col("p4"),

@@ -453,14 +453,15 @@ object EventStream {
       val states = chans.toDF("st")
       def dec9(c: org.apache.spark.sql.Column) =
         sum(c.cast(DecimalType(18, 9))).cast(DoubleType)
-      var pv = variants.crossJoin(states).withColumn("p", lit(0.0))
-      for (_ <- 1 to 12) {
+      // metadata-sized state, one [[graft.ops.Fixpoint]] checkpoint a step
+      val pv0 = variants.crossJoin(states).withColumn("p", lit(0.0))
+      val pv = graft.ops.Fixpoint.run(pv0, 12) { (pv, _) =>
         val acc = tp
           .join(pv.select(col("rm"), col("st").as("b"), col("p")
             .as("pb")), Seq("b"))
           .groupBy(col("rm"), col("a"))
           .agg(dec9(col("p") * col("pb")).as("acc"))
-        pv = variants.crossJoin(states)
+        variants.crossJoin(states)
           .join(broadcast(conv), Seq("st"), "left")
           .join(acc.select(col("rm"), col("a").as("st"), col("acc")),
             Seq("rm", "st"), "left")
@@ -468,8 +469,7 @@ object EventStream {
             when(col("rm") === col("st"), lit(0.0))
               .otherwise(coalesce(col("cv"), lit(0.0)) +
                 coalesce(col("acc"), lit(0.0))).as("p"))
-          .localCheckpoint()
-      }
+      }.state
       val p0 = tp.filter(col("a") === "start" && col("b") === "purchase")
         .agg(coalesce(max(col("p")), lit(0.0)).as("p0"))
       val startTp = tp

@@ -34,19 +34,20 @@ object GraftBridge {
   def analyzed(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 
-  /** Free the storage blocks behind a `localCheckpoint()`ed DataFrame.
-    * localCheckpoint materializes to a persisted internal RDD wrapped in
-    * a `LogicalRDD`, but exposes no way to release it — iterative
-    * operators that checkpoint per round (kCore peeling) would
-    * otherwise pin every round's blocks until the context cleaner
-    * eventually notices (gigabytes at the 3× scale probe). No-op for
-    * non-checkpoint plans. */
-  def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
+  /** Free the storage blocks behind a cached or `localCheckpoint()`ed
+    * DataFrame; Spark has no call that releases a checkpoint, so per-round
+    * checkpoints (graft.ops.Fixpoint) stay pinned until the context
+    * cleaner notices (gigabytes at the 3× scale probe). Only a plan that
+    * IS a checkpoint is released, by id as the cleaner does it
+    * (`RDD.unpersist` logs a WARN per local checkpoint). */
+  def release(df: DataFrame): Unit = {
+    df.unpersist(blocking = false)
+    df.queryExecution.analyzed match {
       case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = false)
+        r.rdd.sparkContext.unpersistRDD(r.rdd.id, blocking = false)
       case _ => ()
     }
+  }
 
   /** Block until every queued SparkListener event has been delivered
     * (`listenerBus` is `private[spark]`). Task-end metrics arrive on

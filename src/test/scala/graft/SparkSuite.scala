@@ -9,4 +9,8 @@ import org.apache.spark.sql.SparkSession
 trait SparkSuite {
   lazy val spark: SparkSession =
     Sessions.local("local[4]", "/tmp/graft_warehouse_test")
+
+  /** RDDs the session holds in storage (cached or checkpointed). Spark
+    * keeps them in a weak map, so a GC can only lower the count. */
+  def pinned: Int = spark.sparkContext.getPersistentRDDs.size
 }

@@ -268,8 +268,10 @@ class IncrementalSpec extends AnyFunSuite with SparkSuite {
     val edges = edges0.toDF("a", "b")
     val e = edges.select(col("a").as("src"), col("b").as("dst"))
       .union(edges.select(col("b").as("src"), col("a").as("dst")))
+    val base = pinned
     val ranks = Graph.pageRank(e).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(pinned <= base + 1, "only the result may stay pinned")
     val total = ranks.values.sum
     assert(math.abs(total - 1.0) < 1e-6, s"rank mass $total drifted")
     assert(ranks("h") > ranks("s1") * 3,

@@ -292,8 +292,10 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
 
   test("components: a 60-node chain (diameter > 25) → one cluster") {
     val pairs = (1L until 60L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val base = pinned
     val comp = Dedup.components(pairs, "id_a", "id_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(pinned <= base + 1, "only the result may stay pinned")
     assert(comp.size == 60)
     assert(comp.values.forall(_ == 1L), s"split clusters: $comp")
   }
@@ -684,8 +686,10 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     // implementation that only peels once
     val pairs = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
       (3L, 4L), (4L, 5L), (5L, 6L)).toDF("id_a", "id_b")
+    val base = pinned
     val core = Graph.kCore(pairs, "id_a", "id_b", k = 2, rounds = 4)
       .orderBy($"node").collect()
+    assert(pinned <= base + 1, "only the result may stay pinned")
     assert(core.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L, 4L))
     assert(core.map(_.getLong(1)).forall(_ == 3L)) // clique degrees
     // k above the max degree empties the graph without erroring
@@ -785,8 +789,10 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       .map(i => (i, if (i == 0L) "A" else null))
       .toDF("node", "seed_label")
     val pairs = (0L until 11L).map(i => (i, i + 1)).toDF("a", "b")
+    val base = pinned
     val out = Graph.labelPropagation(nodes, pairs, "a", "b", 12)
       .orderBy($"node").collect()
+    assert(pinned <= base + 1, "only the result may stay pinned")
     assert(out.length == 12)
     assert(out.forall(_.getString(1) == "A"))
     assert(out.count(_.getBoolean(2)) == 1)
@@ -1018,8 +1024,10 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
       .toDF("id_a", "id_b")
     val seeds = Seq(Tuple1(1L), Tuple1(10L)).toDF("node")
+    val base = pinned
     val got = Graph.bfsHops(pairs, "id_a", "id_b", seeds, 3)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(pinned <= base + 1, "only the result may stay pinned")
     // node 5 is 4 hops out — beyond the 3-round horizon
     assert(got == Map(1L -> 0, 10L -> 0, 2L -> 1, 3L -> 2, 4L -> 3))
   }
@@ -1029,8 +1037,10 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       .flatMap { case (a, b) => Seq((a, b), (b, a)) }
       .toDF("src", "dst")
     val seeds = Seq(Tuple1(1L)).toDF("node")
+    val base = pinned
     val got = Graph.personalizedPageRank(pairs, seeds)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(pinned <= base + 1, "only the result may stay pinned")
     // proximity ordering from the single seed at node 1
     assert(got(1L) > got(2L) && got(2L) > got(3L) && got(3L) > got(4L),
       got.toString)

@@ -125,8 +125,11 @@ class WarehouseSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("absorption: probabilities are monotone in k and within [0,1]") {
+    val base = pinned
     val rows = Warehouse.queries("events_absorption_prob")(spark,
       "/root/testdata/sf0.001").collect()
+    // the p1, p4 and p8 snapshots the result joins; no other round
+    assert(pinned <= base + 3, "only the three snapshots may stay pinned")
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (p1, p4, p8) = (r.getAs[Double]("p1"), r.getAs[Double]("p4"),

@@ -2,9 +2,12 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSuite
@@ -19,8 +22,24 @@ case class Vec(id: Long, v: Seq[Double], nrm: Double)
 /** Structured Streaming parity: the SAME hourlyAgg transform that the
   * batch oracle checks is run here as a real streaming query (memory
   * sink), plus a stateful mapGroupsWithState op. */
-class StreamingSpec extends AnyFunSuite with SparkSuite {
+class StreamingSpec extends AnyFunSuite with SparkSuite
+    with BeforeAndAfterAll {
   import spark.implicits._
+
+  // StreamingQuery.stop() cancels the query's job group twice even when
+  // no batch is running, and the DAGScheduler logs each cancel that finds
+  // no job as a WARN: two lines per test. That one logger is kept at
+  // ERROR while this suite runs, then inherits its level again.
+  private val dagLogger = "org.apache.spark.scheduler.DAGScheduler"
+
+  override def beforeAll(): Unit = Configurator.setLevel(dagLogger, Level.ERROR)
+
+  override def afterAll(): Unit = {
+    // the scheduler handles events in order: once a job submitted now
+    // has run, the last stop()'s cancels have been logged
+    spark.range(1).count()
+    Configurator.setLevel(dagLogger, null: Level)
+  }
 
   def ts(m: Int): Timestamp = Timestamp.valueOf(f"2024-01-01 ${m / 60}%02d:${m % 60}%02d:00")
 
