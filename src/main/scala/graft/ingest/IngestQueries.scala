@@ -1,6 +1,7 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.GraftBridge.readParquet
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
@@ -26,7 +27,7 @@ object IngestQueries {
     * dispatches on extension, so hand it the glob. */
   private def roundtrip(s: SparkSession, dir: String, table: String,
       orderCol: String, opts: Collimate.Options = Collimate.Options()): DataFrame = {
-    val src = s.read.parquet(s"$dir/$table.parquet")
+    val src = readParquet(s, s"$dir/$table.parquet")
     val out = tmpDir(dir, table)
     exportCsv(src, orderCol, out)
     val ingested = Collimate(s, s"$out/*.csv", opts).df
@@ -147,7 +148,7 @@ object IngestQueries {
     // O2: TSV scan through the full pipeline (part file renamed to .tsv
     // so the extension dispatch takes the tab-delimited branch)
     "ingest_roundtrip_region_tsv" -> { (s, dir) =>
-      val src = s.read.parquet(s"$dir/region.parquet")
+      val src = readParquet(s, s"$dir/region.parquet")
       val out = tmpDir(dir, "region_tsv")
       src.orderBy("r_regionkey").coalesce(1).write.mode("overwrite")
         .option("header", "true").option("sep", "\t").csv(out)
@@ -166,7 +167,7 @@ object IngestQueries {
     // region is a fixed 5-row dim, so writing the array driver-side is
     // exact, not a scale compromise
     "ingest_roundtrip_region_json" -> { (s, dir) =>
-      val src = s.read.parquet(s"$dir/region.parquet")
+      val src = readParquet(s, s"$dir/region.parquet")
       val rows = src.orderBy("r_regionkey").collect().map { r =>
         s"""{"r_regionkey": ${r.getAs[Int]("r_regionkey")}, """ +
           s""""r_name": "${r.getAs[String]("r_name")}"}"""
@@ -189,7 +190,7 @@ object IngestQueries {
     // O7/O8 through the full pipeline at table scale: orders exported
     // with ISO dates, re-ingested with -d → DateType, values intact
     "ingest_roundtrip_orders_dates" -> { (s, dir) =>
-      val src = s.read.parquet(s"$dir/orders.parquet")
+      val src = readParquet(s, s"$dir/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"),
           date_format(col("o_orderdate"), "yyyy-MM-dd").as("o_orderdate"))
@@ -205,7 +206,7 @@ object IngestQueries {
 
     "ingest_infer_customer" -> { (s, dir) =>
       // export customer as CSV, run inference only, surface the decisions
-      val src = s.read.parquet(s"$dir/customer.parquet")
+      val src = readParquet(s, s"$dir/customer.parquet")
       val out = tmpDir(dir, "customer_infer")
       exportCsv(src, "c_custkey", out)
       val schema = TypeInference.infer(Collimate.read(s, s"$out/*.csv"))

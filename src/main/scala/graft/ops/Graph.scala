@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import Q._
 
@@ -455,43 +457,96 @@ object Graph {
   /** Multi-source BFS: minimum hop distance from a seed set, expanded
     * `rounds` frontiers — "how far is every record from a trusted
     * seed?" (provenance radius over an entity graph, contamination
-    * blast-radius over a similarity graph). Frontier-based: each round
-    * joins the edge list against ONLY the nodes first reached last
-    * round (never the whole reached set), so per-round work tracks the
-    * frontier size; the reached set grows monotonically and the
-    * `left_anti` novelty check is a node-sized join. The reached set is
-    * checkpointed every round ([[Fixpoint]]) — the anti-join re-reads
-    * materialized rows, not a growing plan. Same pair-source-agnostic
+    * blast-radius over a similarity graph). Same pair-source-agnostic
     * stance as [[labelPropagation]]/[[kCore]]: feed it blocked fuzzy
     * pairs, LSH band pairs, or exact anchors.
     *
-    * `seeds` = (node); unreached nodes are absent from the output. */
+    * One bounded collect brings the pairs and the seeds to the driver,
+    * at most `cap + 1` rows. When at most `cap` come back, the rounds run
+    * there over adjacency arrays ([[bfsLocal]]) and the result is a local
+    * relation: building the frame starts no further job. Otherwise the
+    * rounds run as a frontier-based [[Fixpoint]] loop: each round joins
+    * the edge list against ONLY the nodes first reached last round
+    * (never the whole reached set), so per-round work tracks the
+    * frontier size; the reached set grows monotonically and the
+    * `left_anti` novelty check is a node-sized join. The reached set is
+    * checkpointed every round — the anti-join re-reads materialized
+    * rows, not a growing plan; it recomputes the pairs the collect
+    * read. Both paths give the same rows and schema.
+    *
+    * `seeds` = (node); every seed row is kept at hop 0, and unreached
+    * nodes are absent from the output. */
   def bfsHops(pairs: DataFrame, aCol: String, bCol: String,
-      seeds: DataFrame, rounds: Int): DataFrame = {
-    // NOT dst-partitioned: the r16 A/B measured the pageRank-style
-    // dst-layout (exchange-free frontier distinct) at 0.80× @32c /
-    // 0.97× @4c — three node-sized rounds don't amortize an entry
-    // repartition + double materialization. See OPTIMIZATION_r16.md.
-    val ed = pairs.select(explode(array(
-        struct(col(aCol).cast(LongType).as("src"),
-          col(bCol).cast(LongType).as("dst")),
-        struct(col(bCol).cast(LongType).as("src"),
-          col(aCol).cast(LongType).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val seeds0 = seeds.select(col("node").cast(LongType).as("node"),
-      lit(0).as("dist")).localCheckpoint()
-    // reached set with its hop, read twice a round: [[Fixpoint]]'s every = 1
-    Fixpoint.run(seeds0, rounds, assets = Seq(ed, seeds0)) { (dist, r) =>
-      val novel = ed
-        .join(dist.filter(col("dist") === r - 1)
-          .select(col("node").as("src")), "src")
-        .select(col("dst").as("node")).distinct()
-        .join(dist, Seq("node"), "left_anti")
-        .select(col("node"), lit(r).as("dist"))
-      dist.union(novel)
-    }.state
+      seeds: DataFrame, rounds: Int, cap: Int = BfsLocalCap): DataFrame = {
+    val ab = pairs.select(col(aCol).cast(LongType).as("a"),
+      col(bCol).cast(LongType).as("b"))
+    val seed0 = seeds.select(col("node").cast(LongType).as("node"),
+      lit(0).as("dist"))
+    // seed rows carry a null `b` and the flag
+    val got = ab.select(col("a"), col("b"), lit(false))
+      .union(seed0.select(col("node"), lit(null).cast(LongType), lit(true)))
+      .limit(cap + 1).collect()
+    if (got.length <= cap) {
+      val nullable = Seq(seed0.schema("node"), ab.schema("a"), ab.schema("b"))
+        .exists(_.nullable)
+      pairs.sparkSession.createDataFrame(bfsLocal(got, rounds).asJava,
+        StructType(Seq(StructField("node", LongType, nullable),
+          StructField("dist", IntegerType, nullable = false))))
+    } else {
+      // NOT dst-partitioned: the r16 A/B measured the pageRank-style
+      // dst-layout (exchange-free frontier distinct) at 0.80× @32c /
+      // 0.97× @4c — three node-sized rounds don't amortize an entry
+      // repartition + double materialization. See OPTIMIZATION_r16.md.
+      val ed = ab.select(explode(array(
+          struct(col("a").as("src"), col("b").as("dst")),
+          struct(col("b").as("src"), col("a").as("dst")))).as("e"))
+        .select(col("e.src").as("src"), col("e.dst").as("dst"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val seeds0 = seed0.localCheckpoint()
+      // reached set with its hop, read twice a round: [[Fixpoint]]'s every = 1
+      Fixpoint.run(seeds0, rounds, assets = Seq(ed, seeds0)) { (dist, r) =>
+        val novel = ed
+          .join(dist.filter(col("dist") === r - 1)
+            .select(col("node").as("src")), "src")
+          .select(col("dst").as("node")).distinct()
+          .join(dist, Seq("node"), "left_anti")
+          .select(col("node"), lit(r).as("dist"))
+        dist.union(novel)
+      }.state
+    }
   }
+
+  /** [[bfsHops]]'s rounds on the driver over adjacency arrays, from its
+    * collected (a, b, isSeed) rows, with the loop's rows: every seed row
+    * at hop 0 (duplicates, nulls and seeds outside the graph included),
+    * then each node at the round that first reaches it. A null id never
+    * expands, and the loop's anti-join never matches it, so a null
+    * neighbour comes back as (null, r) in every round r whose frontier
+    * touches one. */
+  private def bfsLocal(got: Array[Row], rounds: Int): Seq[Row] = {
+    val (seedRows, edgeRows) = got.partition(_.getBoolean(2))
+    def id(r: Row, i: Int) = Option.when(!r.isNullAt(i))(r.getLong(i))
+    val adj = edgeRows
+      .flatMap(r => Seq(id(r, 0) -> id(r, 1), id(r, 1) -> id(r, 0)))
+      .collect { case (Some(u), v) => u -> v }.groupMap(_._1)(_._2)
+    val seeds = seedRows.flatMap(id(_, 0))
+    val reached = mutable.HashSet.from(seeds)
+    var frontier = seeds.distinct.toSeq
+    val hops = (1 to rounds).flatMap { r =>
+      val nbrs = frontier.flatMap(adj.getOrElse(_, Array.empty[Option[Long]]))
+        .distinct
+      frontier = nbrs.flatten.filter(reached.add)
+      (if (nbrs.contains(None)) Seq(Row(null, r)) else Nil) ++
+        frontier.map(Row(_, r))
+    }
+    seedRows.toSeq.map(r => Row(r.get(0), 0)) ++ hops
+  }
+
+  /** Most rows (edge pairs plus seeds) [[bfsHops]] collects to run on the
+    * driver. It bounds driver heap: a few hundred bytes per row for the
+    * collected rows, the adjacency arrays and the result rows, under
+    * 100 MB at the cap. */
+  val BfsLocalCap = 1 << 18
 
   val BfsRounds = 3
 

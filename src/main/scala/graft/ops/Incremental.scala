@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.GraftBridge.readParquet
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -124,7 +125,7 @@ object Incremental {
       indexDir: String, outDir: String, batchId: Long): Unit = {
     val sp = batch.sparkSession
     val index =
-      if (graft.Util.Fs.exists(sp, indexDir)) sp.read.parquet(indexDir)
+      if (graft.Util.Fs.exists(sp, indexDir)) readParquet(sp, indexDir)
       else sp.createDataFrame(sp.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(Seq(StructField("fp", StringType))))
     val survivors = dedupAgainstIndex(batch, index, idCol, textCol)
@@ -163,7 +164,7 @@ object Incremental {
     val bs = batch.groupBy(col(keyCol))
       .agg(theta_sketch_agg(col(itemCol).cast(StringType)).as("sk"))
     val merged = if (graft.Util.Fs.exists(sp, stateDir))
-      bs.unionByName(sp.read.parquet(stateDir))
+      bs.unionByName(readParquet(sp, stateDir))
         .groupBy(col(keyCol)).agg(theta_union_agg(col("sk")).as("sk"))
     else bs
     // eager checkpoint cuts the read-then-overwrite cycle on stateDir
@@ -222,7 +223,7 @@ object Incremental {
       StructField("last_value", DoubleType),
       StructField("n_changes", LongType)))
     val state =
-      if (graft.Util.Fs.exists(sp, stateDir)) sp.read.parquet(stateDir)
+      if (graft.Util.Fs.exists(sp, stateDir)) readParquet(sp, stateDir)
       else sp.createDataFrame(
         sp.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
     val st = state.select(col("user_id"), col("last_ts").as("s_ts"),
@@ -268,7 +269,7 @@ object Incremental {
       StructField("n_hours", LongType), StructField("last_n", LongType),
       StructField("level", DoubleType), StructField("trend", DoubleType)))
     val state =
-      if (graft.Util.Fs.exists(sp, stateDir)) sp.read.parquet(stateDir)
+      if (graft.Util.Fs.exists(sp, stateDir)) readParquet(sp, stateDir)
       else sp.createDataFrame(
         sp.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
     val merged = hourly.join(
@@ -540,7 +541,7 @@ object Incremental {
         // bottom half) is only probabilistic — a degenerate one-cluster
         // corpus legitimately occupies few buckets — so it warns
         // instead of failing.
-        val bkAgg = sp.read.parquet(verDir(0))
+        val bkAgg = readParquet(sp, verDir(0))
           .agg(max(col("bk")).cast(LongType), count(lit(1))).head()
         if (!bkAgg.isNullAt(0)) {
           val (mxBk, nRows) = (bkAgg.getLong(0), bkAgg.getLong(1))
@@ -557,7 +558,7 @@ object Incremental {
         }
         val indexed0 =
           if (graft.Util.Fs.exists(sp, vecDir))
-            sp.read.parquet(vecDir).count() else 0L
+            readParquet(sp, vecDir).count() else 0L
         val m = EmbIndexMeta(0, bits, math.max(indexed0, refN))
         writeEmbIndexMeta(sp, indexDir, m)
         Some(m)
@@ -581,7 +582,7 @@ object Incremental {
     val novel = (meta match {
       case Some(m) if graft.Util.Fs.exists(sp, verDir(m.version)) =>
         val dup = probeEmbeddingIndex(batch,
-            sp.read.parquet(verDir(m.version)), sp.read.parquet(vecDir),
+            readParquet(sp, verDir(m.version)), readParquet(sp, vecDir),
             threshold, tables, m.bits, dim, m.kHigh)
           .select(col("id_batch").as("id")).distinct()
         batch.join(dup, Seq("id"), "left_anti")
@@ -642,7 +643,7 @@ object Incremental {
     survivors.select(col("id"), col("v"), col("nrm"))
       .write.mode("append").parquet(vecDir)
     // ---- re-index watermark ----
-    val indexedN = sp.read.parquet(vecDir).count()
+    val indexedN = readParquet(sp, vecDir).count()
     meta match {
       case None =>
         // design size = the capacity the chosen width covers (at least
@@ -658,7 +659,7 @@ object Incremental {
           // rebuild at the wider setting into a fresh version dir; the
           // meta flip is atomic, then the stale version is dropped
           // (a crash between the two is cleaned by the entry GC above)
-          embeddingBandIndex(sp.read.parquet(vecDir), tables, newBits,
+          embeddingBandIndex(readParquet(sp, vecDir), tables, newBits,
               dim, newKHigh)
             .write.mode("overwrite").parquet(verDir(m.version + 1))
           writeEmbIndexMeta(sp, indexDir,
@@ -927,7 +928,7 @@ object Incremental {
         idxDir, outDir, 1L)
       processBatch(docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
         idxDir, outDir, 2L)
-      val out = s.read.parquet(outDir)
+      val out = readParquet(s, outDir)
         .select(col("doc_id"), col("fp"), col("batch_id"))
         .orderBy(col("doc_id"))
         .localCheckpoint()
@@ -955,7 +956,7 @@ object Incremental {
         .head.getLong(0)
       processCdcBatch(e.filter(unix_micros(col("ts")) < cut), stateDir)
       processCdcBatch(e.filter(unix_micros(col("ts")) >= cut), stateDir)
-      val out = s.read.parquet(stateDir)
+      val out = readParquet(s, stateDir)
         .select(col("user_id"), unix_micros(col("last_ts")).as("last_us"),
           col("last_event_id"), col("last_type"), col("last_value"),
           col("n_changes"))
@@ -980,7 +981,7 @@ object Incremental {
         .cast(LongType)).head.getLong(0)
       processHoltBatch(e.filter(hourOf < cut), stateDir)
       processHoltBatch(e.filter(hourOf >= cut), stateDir)
-      val out = s.read.parquet(stateDir)
+      val out = readParquet(s, stateDir)
         .select(col("event_type"), col("n_hours"), col("last_n"),
           col("level"), col("trend"),
           q6(col("level") + col("trend")).as("forecast_next"))
@@ -1033,7 +1034,7 @@ object Incremental {
         idxDir, vecDir, outDir, 1L, tau, bits = bl, kHigh = kh)
       processEmbeddingBatch(vecs.filter(col("id") % 2 === 1),
         idxDir, vecDir, outDir, 2L, tau, bits = bl, kHigh = kh)
-      val out = s.read.parquet(outDir)
+      val out = readParquet(s, outDir)
         .select(col("id"), col("batch_id"))
         .orderBy(col("id"))
         .localCheckpoint()
@@ -1056,7 +1057,7 @@ object Incremental {
         "event_type", "user_id", s"$tmp/state")
       processSketchBatch(ev.filter(col("user_id") % 2 === 1),
         "event_type", "user_id", s"$tmp/state")
-      val out = s.read.parquet(s"$tmp/state")
+      val out = readParquet(s, s"$tmp/state")
         .select(col("event_type"),
           round(theta_sketch_estimate(col("sk")).cast(DoubleType), 2)
             .as("approx_users"))
@@ -1098,7 +1099,7 @@ object Incremental {
         bits = bl, kHigh = kh)
       processEmbeddingBatch(b2, idxDir, vecDir, outDir, 2L, tau,
         bits = bl, kHigh = kh)
-      val streamed = s.read.parquet(outDir)
+      val streamed = readParquet(s, outDir)
         .select(col("id"), col("batch_id")).localCheckpoint()
       graft.Util.rmrf(new java.io.File(tmp))
       val exact = exactEmbeddingFold(b1, b2, tau)

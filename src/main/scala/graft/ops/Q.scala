@@ -1,12 +1,16 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.GraftBridge.readParquet
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Shared query helpers. */
 object Q {
-  /** Read one of the driver's parquet tables.
+  /** Read one of the driver's parquet tables. Building the frame starts
+    * no Spark job: the schema comes from one footer read on the driver
+    * ([[org.apache.spark.sql.GraftBridge.readParquet]]), where
+    * `spark.read.parquet` runs a job to infer it.
     *
     * The 2026-08-13 testdata regeneration switched every temporal
     * column to parquet `timestamp[us]` WITHOUT the UTC flag (previously
@@ -20,7 +24,7 @@ object Q {
     * DuckDB oracles, which see naive timestamps either way) was built
     * against. */
   def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    val raw = s.read.parquet(s"$dir/$name.parquet")
+    val raw = readParquet(s, s"$dir/$name.parquet")
     raw.schema.fields.collect {
       case f if f.dataType == TimestampNTZType => f.name
     }.foldLeft(raw)((df, c) => df.withColumn(c, col(c).cast(TimestampType)))
@@ -110,7 +114,9 @@ object Q {
     * production layout, and the 10× probe dirs), this is a no-op and
     * the plain distinct KEEPS its map-side partial aggregate — the
     * r15 verdict's scale concern with the unguarded form, which
-    * shuffled raw pre-dedup rows at every layout.
+    * shuffled raw pre-dedup rows at every layout. The spread has the
+    * guard's target of partitions, not `spark.sql.shuffle.partitions`,
+    * and AQE never coalesces a numbered repartition back to one task.
     *
     * Same caveat as [[spread]] on the planning pass: the guard reads
     * the physical scan's partition count, which plans the (narrow)
@@ -120,6 +126,6 @@ object Q {
   def spreadBy(df: DataFrame, cols: Column*): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= target) df
-    else df.repartition(cols: _*)
+    else df.repartition(target, cols: _*)
   }
 }

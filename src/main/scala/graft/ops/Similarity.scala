@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.GraftBridge.readParquet
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -221,8 +222,8 @@ object Similarity {
     * reads only the matching directories. */
   def ivfIndexProbe(s: SparkSession, path: String, probes: DataFrame,
       k: Int, nprobe: Int = IvfProbes): DataFrame = {
-    val assigned = s.read.parquet(s"$path/assignments")
-    val centDf = s.read.parquet(s"$path/centroids")
+    val assigned = readParquet(s, s"$path/assignments")
+    val centDf = readParquet(s, s"$path/centroids")
     ivfSearch(assigned, centDf, probes, k, nprobe)
   }
 

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftBridge.readParquet
 import org.apache.spark.sql.functions._
 
 import graft.ops.Q._
@@ -26,7 +27,7 @@ object Sinks {
       val out = tmp(dir, "docs_by_lang")
       t(s, dir, "documents")
         .write.mode("overwrite").partitionBy("lang").parquet(out)
-      s.read.parquet(out)
+      readParquet(s, out)
         .filter(col("lang").isin("de", "es"))
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .orderBy(col("doc_id"))
@@ -44,7 +45,7 @@ object Sinks {
       val out = tmp(dir, "orders_by_pri")
       t(s, dir, "orders")
         .write.mode("overwrite").partitionBy("o_orderpriority").parquet(out)
-      val fact = s.read.parquet(out)
+      val fact = readParquet(s, out)
       val dim = t(s, dir, "orders")
         .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("pri_cnt"))
         .filter(col("pri_cnt") % 3 =!= 0)
@@ -61,7 +62,7 @@ object Sinks {
       t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
         .write.mode("overwrite").option("compression", "zstd").parquet(out)
-      s.read.parquet(out)
+      readParquet(s, out)
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"), sum(col("l_quantity")).as("sum_qty"))
         .orderBy(col("l_returnflag"))

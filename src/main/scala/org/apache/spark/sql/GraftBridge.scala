@@ -1,7 +1,10 @@
 package org.apache.spark.sql
 
 import com.univocity.parsers.csv.CsvParser
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 import org.apache.spark.deploy.SparkHadoopUtil
 import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityParser}
@@ -9,14 +12,17 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.datasources.{CodecStreams, DataSource}
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.util.HadoopFSUtils
 
 /** Bridge to Spark internals that graft needs and Spark keeps
   * `private[sql]`: the Column ↔ Expression conversion for graft's custom
   * Catalyst expressions (`ExpressionUtils`) and the CSV header parsing
-  * (`UnivocityParser`, `CSVUtils`) behind the driver-side header read.
-  * Both have to be reached from inside the package — this is the only
+  * (`UnivocityParser`, `CSVUtils`) behind the driver-side header read,
+  * and the Parquet footer conversion behind the driver-side schema read.
+  * All have to be reached from inside the package — this is the only
   * file outside the `graft` namespace. */
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -122,6 +128,45 @@ object GraftBridge {
         reader.schema(schema).option(DataSource.GLOB_PATHS_KEY, "false")
           .csv(roots.map(_.getPath.toString): _*)
       else reader.schema(schema).csv(path)
+    }
+  }
+
+  /** `spark.read.parquet(path)` without its schema-inference job: Spark
+    * starts one job per read only to read one footer
+    * (`ParquetUtils.inferSchema` → `mergeSchemasInParallel`). This reads
+    * the same footer on the driver and hands the schema to the reader.
+    *
+    * The footer is the one Spark picks: the path's leaf files, listed
+    * recursively as the file index lists them (Spark's hidden-name
+    * filter, which keeps the `_common_metadata`/`_metadata` summaries),
+    * in path order; a `_common_metadata`, else a `_metadata`, else the
+    * first data file. The conversion is Spark's, under the session conf,
+    * so `nanosAsLong` and TIMESTAMP_NTZ inference follow the session.
+    * Partition columns are still discovered from the directory names by
+    * the reader. When the path is missing or holds no data file, Spark's
+    * own read runs and raises its usual error. */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def leaves(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq
+      .filterNot(s => HadoopFSUtils.shouldFilterOutPathName(s.getPath.getName))
+      .flatMap(s => if (s.isDirectory) leaves(s.getPath) else Seq(s))
+    val files = (if (fs.exists(root)) leaves(root) else Nil)
+      .sortBy(_.getPath.toString)
+    val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+      ParquetFileWriter.PARQUET_METADATA_FILE)
+    files.find(f => !summaries.contains(f.getPath.getName)) match {
+      case None => spark.read.parquet(path)
+      case Some(data) =>
+        val first = summaries.flatMap(n => files.find(_.getPath.getName == n))
+          .headOption.getOrElse(data)
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(first, conf), SKIP_ROW_GROUPS)
+        val schema = ParquetFileFormat.readSchemaFromFooter(
+          new Footer(first.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        spark.read.schema(schema).parquet(path)
     }
   }
 }

@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 
 /** The shared test session: the mains' config on a fixed `local[4]`, so
   * every machine and every exported bench setting tests the same thing,
@@ -13,4 +16,20 @@ trait SparkSuite {
   /** RDDs the session holds in storage (cached or checkpointed). Spark
     * keeps them in a weak map, so a GC can only lower the count. */
   def pinned: Int = spark.sparkContext.getPersistentRDDs.size
+
+  /** Spark jobs started while `body` runs. */
+  def jobsIn(body: => Unit): Int = {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    GraftBridge.flushListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      GraftBridge.flushListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
 }

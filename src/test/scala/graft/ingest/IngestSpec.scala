@@ -173,24 +173,6 @@ class IngestSpec extends AnyFunSuite with SparkSuite {
     seen.toArray.toSeq.map(_.toString)
   }
 
-  /** Spark jobs started while `body` runs. */
-  def jobsIn(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.graft.ListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.graft.ListenerBus.drain(sc)
-    } finally sc.removeSparkListener(listener)
-    jobs.get
-  }
-
   test("inference runs at most 3 Spark jobs") {
     val df = Collimate.read(spark, fixture("late_surprise.csv"))
     val jobs = jobsIn(TypeInference.infer(df, parseDates = true))

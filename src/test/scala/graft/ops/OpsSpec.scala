@@ -1032,6 +1032,35 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     assert(got == Map(1L -> 0, 10L -> 0, 2L -> 1, 3L -> 2, 4L -> 3))
   }
 
+  test("spreadBy spreads to the session's parallelism, not its shuffle partitions") {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try {
+      val target = spark.sparkContext.defaultParallelism
+      assert(target != 2)
+      val one = spark.range(0, 1000, 1, 1).toDF("x")
+      assert(Q.spreadBy(one, col("x")).rdd.getNumPartitions == target)
+    } finally spark.conf.set(key, before)
+  }
+
+  test("bfsHops: null ids and null seeds give the same rows on both paths") {
+    val pairs = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, null),
+      (null, 3L), (3L, 4L), (null, null), (2L, 2L), (1L, 2L))
+      .toDF("id_a", "id_b")
+    val seeds = Seq[java.lang.Long](1L, null, 1L, 9L).map(Tuple1(_))
+      .toDF("node")
+    // the loop's anti-join never matches a null, so a null neighbour of
+    // the round-2 frontier {2} comes back at hop 2; nothing reaches 3, 4
+    val want = Seq[(java.lang.Long, Int)]((1L, 0), (1L, 0), (9L, 0),
+      (null, 0), (2L, 1), (null, 2)).map(_.toString).sorted
+    Seq(Graph.BfsLocalCap, 0).foreach { cap =>
+      val got = Graph.bfsHops(pairs, "id_a", "id_b", seeds, 3, cap)
+        .collect().map(r => (r.get(0), r.getInt(1)).toString).toSeq.sorted
+      assert(got == want, s"cap $cap")
+    }
+  }
+
   test("personalized pagerank: rank decays with distance from the seed; mass conserved") {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
       .flatMap { case (a, b) => Seq((a, b), (b, a)) }

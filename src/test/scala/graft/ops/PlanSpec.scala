@@ -342,6 +342,17 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
       s"BFS frontier join fell back to a nested loop:\n$plan")
   }
 
+  test("building a query starts no job for its table reads") {
+    Seq("q1_pricing_summary", "q3_shipping_priority", "text_quality")
+      .foreach(name => assert(jobsIn(q(name)) == 0, name))
+    // the bounded collect of graph_bfs_hops' pairs and seeds is the only
+    // action: 4 jobs at sf0.01 (the fuzzy-pair join's stages under AQE,
+    // then the limited collect), where the checkpoint loop started 19
+    val bfs = jobsIn(SparkEntry.queries("graph_bfs_hops")(spark,
+      "/root/testdata/sf0.01"))
+    assert(bfs <= 4, s"$bfs jobs")
+  }
+
   test("IVF index lands partitioned by cluster; literal reads prune") {
     // what this locks: the on-disk LAYOUT — one directory per cluster,
     // and a cluster-literal read resolves to PartitionFilters (no full
