@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.mutable
@@ -15,16 +15,12 @@ import Q._
   * PageRank and degree profiling over the supplier–part bipartite graph
   * induced by `lineitem`.
   *
-  * Scale design: each PageRank iteration is one NODE-sized join (ranks
-  * ⋈ deg builds the per-node contribution, DECIMAL-cast once per node)
-  * followed by one EDGE-sized equi-join + `groupBy(dst)` whose partial
-  * aggregation combines contributions map-side — the edge-sized shuffle
-  * is the only one that scales with data. The rank frame is the
-  * [[Fixpoint]] state, so its checkpoints are rank-frame-sized
-  * (|nodes|), not edge-sized. The two-long-wide edge list is persisted
-  * once and reused by all iterations — at 100 TB that is the dominant
-  * asset and it never re-shuffles after the first hash partition on
-  * `src`.
+  * PageRank, uniform or personalized, is one recurrence ([[rankLoop]])
+  * over the node set src ∪ dst. Each round is one EDGE-sized equi-join
+  * of the persisted edge asset with the node-sized contribution frame
+  * (rank/deg, DECIMAL-cast once per node) and one `groupBy(dst)` whose
+  * partial aggregation combines contributions map-side. The rank frame
+  * is the [[Fixpoint]] state, so its checkpoints are node-sized.
   *
   * Determinism: per-iteration contributions are summed with the
   * [[Q.dsum]] DECIMAL trick (order-independent), and each iteration's
@@ -41,8 +37,17 @@ object Graph {
     * the million-times-larger edge list never moves. Above it, the
     * edge list is persisted pre-partitioned and pre-sorted on `src`
     * once, so each iteration's sort-merge join shuffles only the
-    * node-sized rank frame. */
+    * node-sized contribution frame. */
   val BroadcastNodesCap = 5000000L
+
+  /** Both directions of every (a, b) pair as (src, dst), in ONE pass
+    * over the pairs: a union(pairs, pairs.reverse) would execute the
+    * pair subtree twice (self-union has no subtree reuse guarantee). */
+  private def bidirectional(pairs: DataFrame, a: String, b: String): DataFrame =
+    pairs.select(explode(array(
+        struct(col(a).as("src"), col(b).as("dst")),
+        struct(col(b).as("src"), col(a).as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
 
   /** Undirected supplier–part edges: distinct (l_suppkey, l_partkey)
     * pairs, both directions. Node ids stay LONG end to end — supplier
@@ -66,145 +71,120 @@ object Graph {
         col("s"), col("p"))
       .distinct()
       .select((col("s") * 2).as("a"), (col("p") * 2 + 1).as("b"))
-    // both directions in ONE pass over the distinct pair set — a
-    // union(li, li.reverse) would execute the scan+distinct subtree
-    // twice (self-union has no subtree reuse guarantee)
-    li.select(explode(array(
-        struct(col("a").as("src"), col("b").as("dst")),
-        struct(col("b").as("src"), col("a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+    bidirectional(li, "a", "b")
   }
 
-  /** Fixed-iteration PageRank. On an undirected (bidirectional) edge
-    * list every node appears as a `src`, so there are no dangling nodes
-    * and the rank mass is conserved up to rounding. A directed list may
-    * have sinks (a `dst` that is never a `src`): they receive rank but
-    * pass none on, and both layouts below keep them. */
+  /** Fixed-iteration PageRank over a directed (src, dst) edge list: the
+    * personalized recurrence of [[rankLoop]] with every node a seed. */
   def pageRank(edges: DataFrame, damping: Double = Damping,
-      iterations: Int = Iterations): DataFrame = {
+      iterations: Int = Iterations): DataFrame =
+    rankLoop(edges, None, damping, iterations)
+
+  /** Personalized PageRank: the (1−d) teleport mass is split over
+    * `seeds` (node) only, uniform over the distinct seed set, so rank
+    * measures proximity to the seeds. A seed that is not a node of the
+    * graph still counts in |seeds| and receives nothing. */
+  def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
+      damping: Double = Damping,
+      iterations: Int = Iterations): DataFrame =
+    rankLoop(edges, Some(seeds), damping, iterations)
+
+  /** The one PageRank recurrence, returning (node, rank).
+    *
+    * Nodes are src ∪ dst. With k seeds (every node when `seeds` is
+    * None), a seed's teleport share is tp = (1−d)/k and every other
+    * node's is 0; the start rank is round(1/k, 12) on a seed and 0
+    * elsewhere. Each round a node's rank is round(tp + d·Σ c, 12) over
+    * its in-edges, where an edge from u carries c = rank(u)/outdeg(u)
+    * cast to DECIMAL(18,12). A node with no in-edge holds round(tp, 12)
+    * after the first round. A sink (no out-edge) passes nothing on: the
+    * mass that reaches it leaves the graph, so ranks sum to 1 only when
+    * every node has an out-edge (as on a bidirectional list) and every
+    * seed is a node.
+    *
+    * Layout, chosen by node count against `nodesCap`: at or below it
+    * the edge asset is hash-partitioned on `dst` and the contribution
+    * frame is broadcast, so a round is one broadcast-hash join and one
+    * exchange-free aggregate (a broadcast join keeps the streamed side's
+    * partitioning); above it the asset is partitioned and sorted on
+    * `src`, so a round's sort-merge join shuffles only the contribution
+    * frame. The step body is the same on both sides: the edge asset
+    * carries the destination's out-degree (and, personalized, its
+    * teleport share), so the aggregate rebuilds the whole rank state. */
+  private[ops] def rankLoop(edges: DataFrame, seeds: Option[DataFrame],
+      damping: Double, iterations: Int,
+      nodesCap: Long = BroadcastNodesCap): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e0 = edges.persist(lvl)
-    val deg = e0.groupBy("src").agg(count(lit(1)).as("deg"))
-    // |nodes| is a bounded driver scalar (node count, not data volume) —
-    // the same stance as the components convergence check
-    val n = deg.persist(lvl).count()
-    val small = n <= BroadcastNodesCap
-    // Big-graph layout: hash-partition (and sort) the edge list on
-    // `src` once, so per-iteration sort-merge joins shuffle only the
-    // rank frame. The out-degree stays on the NODE-sized deg frame —
-    // the per-edge contribution rank/deg is identical for every edge
-    // of a src, so it is computed (and cast to DECIMAL) once per node
-    // and the persisted edge list stays two longs wide.
-    //
-    // Small-graph layout (guide §2.4 "remove shuffles outright"): when
-    // the node frame is broadcast-sized, EVERY per-iteration exchange
-    // is avoidable. The edge asset is hash-partitioned on `dst` once
-    // and carries the destination's degree (`ddeg`, attached by one
-    // broadcast join at setup), so each iteration is exactly one
-    // broadcast-hash join + one exchange-FREE hash aggregate:
-    //  - contrib = rank/deg needs no join — the rank frame carries its
-    //    own `deg`, refreshed each round from max(ddeg) (all edges of a
-    //    dst carry the identical ddeg, so max is exact; a sink's ddeg
-    //    is null, which is harmless since a sink has no out-edge);
-    //  - groupBy(dst) reuses the edge asset's dst partitioning (a BHJ
-    //    preserves the streamed side's partitioning), so the
-    //    contribution sum never exchanges.
-    // r15 measured ~35% of local steady-state in per-stage AQE
-    // re-planning of the old 3-exchange iterations; this layout leaves
-    // nothing to re-plan but one broadcast per round.
+    val e0 = edges.select(col("src"), col("dst")).persist(lvl)
+    // out-degree (0 for a sink) and in-edge flag of every endpoint, in
+    // one aggregate over both ends of each edge
+    val deg = e0.select(explode(array(
+        struct(col("src").as("node"), lit(1L).as("o"), lit(0).as("i")),
+        struct(col("dst").as("node"), lit(0L).as("o"), lit(1).as("i"))))
+        .as("x"))
+      .groupBy(col("x.node").as("node"))
+      .agg(sum(col("x.o")).as("deg"), max(col("x.i")).as("has_in"))
+    val sd = seeds.map(_.select(col("node")).distinct())
+    val nodes = sd.fold(deg.withColumn("seed", lit(true)))(s =>
+        deg.join(s.withColumn("seed", lit(true)), Seq("node"), "left"))
+      .select(col("node"), col("deg"), col("has_in"),
+        coalesce(col("seed"), lit(false)).as("seed"))
+      .persist(lvl)
+    // |nodes| and |edges| are bounded driver scalars (counts, not data
+    // volume) — the same stance as the components convergence check
+    val Row(n: Long, m: Long, nSources: Long) = nodes.agg(count(lit(1)),
+      coalesce(sum(col("deg")), lit(0L)),
+      count(when(col("has_in") === 0, 1))).first()
+    val k = sd.fold(n)(_.count())
+    // an empty seed set would make every teleport share (1−d)/k
+    // Infinity and the whole rank vector NaN — fail loudly instead
+    require(sd.isEmpty || k > 0,
+      "personalized PageRank needs a non-empty seed set")
+    val small = n <= nodesCap
+    def maybeB(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    val tp = when(col("seed"), lit((1.0 - damping) / k)).otherwise(lit(0.0))
+    // the edge asset carries what the aggregate needs of its dst; the
+    // uniform teleport share stays a literal (a per-edge share measured
+    // ~10 % slower there)
+    val (dstCols, teleport) =
+      if (sd.isEmpty) (Nil, lit((1.0 - damping) / k))
+      else (Seq(tp.as("dtp")), max(col("dtp")))
+    val ed0 = e0.join(maybeB(nodes.select(col("node").as("dst") +:
+      col("deg").as("ddeg") +: dstCols: _*)), Seq("dst"))
     val ed = if (small) {
       // size iteration tasks by data, not by default parallelism: ten
       // join+agg stages over 32 near-empty partitions pay 10×32 task
       // launches for microseconds of compute each; too few partitions
       // serializes the join instead. ~120k edge rows (~2 MB) per task
       // balances the two.
-      val m = e0.count()
-      val parts = math.max(4, math.min(64, (m / 120000L).toInt))
-      e0.join(broadcast(deg.select(col("src").as("dst"),
-          col("deg").as("ddeg"))), Seq("dst"), "left")
-        .repartition(parts, col("dst"))
-    } else e0.repartition(col("src")).sortWithinPartitions("src")
+      ed0.repartition(math.max(4, math.min(64, (m / 120000L).toInt)),
+        col("dst"))
+    } else ed0.repartition(col("src")).sortWithinPartitions("src")
     ed.persist(lvl).count()
     e0.unpersist(blocking = false)
-    val teleport = (1.0 - damping) / n
-    val init =
-      if (small) deg.select(col("src").as("node"),
-        round(lit(1.0 / n), 12).as("rank"), col("deg"))
-      else deg.select(col("src").as("node"),
-        round(lit(1.0 / n), 12).as("rank"))
+    val sources = nodes.filter(col("has_in") === 0)
+      .select(col("node"), round(tp, 12).as("rank"), col("deg"))
+    val init = nodes.select(col("node"),
+      round(when(col("seed"), lit(1.0 / k)).otherwise(lit(0.0)), 12)
+        .as("rank"), col("deg"))
     // node-sized state, read once per round: [[Fixpoint]]'s every = 4
     Fixpoint.run(init, iterations, every = 4,
-        assets = Seq(ed, deg)) { (ranks, _) =>
-      // scale-12 cast: same rounding as a wider decimal, but the
-      // sum accumulator stays in compact-long range (sums < 10^6)
-      if (small) {
-        val contrib = ranks.select(col("node"),
-          (col("rank") / col("deg")).cast(DecimalType(18, 12))
-            .as("contrib"))
-        ed.join(broadcast(contrib), ed("src") === contrib("node"))
-          .groupBy(col("dst"))
-          .agg((lit(teleport) + lit(damping) *
-            sum(col("contrib")).cast(DoubleType)).as("rr"),
-            max(col("ddeg")).as("deg"))
-          .select(col("dst").as("node"), round(col("rr"), 12).as("rank"),
-            col("deg"))
-      } else {
-        val contrib = ranks.join(deg, ranks("node") === deg("src"))
-          .select(col("node"),
-            (col("rank") / col("deg")).cast(DecimalType(18, 12))
-              .as("contrib"))
-        ed.join(contrib, ed("src") === contrib("node"))
-          .groupBy(col("dst"))
-          .agg((lit(teleport) + lit(damping) *
-            sum(col("contrib")).cast(DoubleType)).as("rr"))
-          .select(col("dst").as("node"), round(col("rr"), 12).as("rank"))
-      }
-    }.state.select(col("node"), col("rank"))
-  }
-
-  /** Personalized PageRank: identical iteration to [[pageRank]], but
-    * the (1−d) teleport mass is split over `seeds` only (uniform over
-    * the seed set), so rank measures proximity to the seeds. Seeds
-    * are a node-sized frame; |seeds| is one bounded driver scalar. */
-  def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
-      damping: Double = Damping,
-      iterations: Int = Iterations): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e0 = edges.persist(lvl)
-    val deg = e0.groupBy("src").agg(count(lit(1)).as("deg"))
-      .persist(lvl)
-    val sd = seeds.select(col("node")).distinct().localCheckpoint()
-    val k = sd.count()
-    // an empty seed set would make every teleport weight (1−d)/k
-    // Infinity and the whole rank vector NaN — fail loudly instead
-    require(k > 0, "personalized PageRank needs a non-empty seed set")
-    val teleport = deg.select(col("src").as("node"))
-      .join(sd.withColumn("tp", lit((1.0 - damping) / k)),
-        Seq("node"), "left")
-      .select(col("node"), coalesce(col("tp"), lit(0.0)).as("tp"))
-      .localCheckpoint()
-    // seed-uniform start vector (any start converges; this one makes
-    // early iterations already seed-centric)
-    val init = teleport.select(col("node"),
-      round(when(col("tp") > 0, lit(1.0 / k)).otherwise(lit(0.0)), 12)
-        .as("rank"))
-    // the pageRank cadence; sd and teleport are setup checkpoints
-    Fixpoint.run(init, iterations, every = 4,
-        assets = Seq(e0, deg, sd, teleport)) { (ranks, _) =>
-      val contrib = ranks.join(deg, ranks("node") === deg("src"))
-        .select(col("node"),
-          (col("rank") / col("deg")).cast(DecimalType(18, 12))
-            .as("contrib"))
-      e0.join(contrib, e0("src") === contrib("node"))
+        assets = Seq(ed, nodes)) { (ranks, _) =>
+      // scale-12 cast: same rounding as a wider decimal, but the sum
+      // accumulator stays in compact-long range (sums < 10^6)
+      val contrib = ranks.filter(col("deg") > 0).select(col("node"),
+        (col("rank") / col("deg")).cast(DecimalType(18, 12)).as("contrib"))
+      ed.join(maybeB(contrib), ed("src") === contrib("node"))
         .groupBy(col("dst"))
-        .agg((lit(damping) *
-          sum(col("contrib")).cast(DoubleType)).as("walk"))
-        .select(col("dst").as("node"), col("walk"))
-        .join(teleport, Seq("node"), "right")
-        .select(col("node"),
-          round(col("tp") + coalesce(col("walk"), lit(0.0)), 12)
-            .as("rank"))
-    }.state
+        .agg((teleport + lit(damping) *
+          sum(col("contrib")).cast(DoubleType)).as("rr"),
+          max(col("ddeg")).as("deg"))
+        .select(col("dst").as("node"), round(col("rr"), 12).as("rank"),
+          col("deg"))
+        // without sources (any bidirectional list) the union would only
+        // add a scan of the node frame to every round
+        .transform(r => if (nSources > 0) r.union(sources) else r)
+    }.state.select(col("node"), col("rank"))
   }
 
   /** DuckDB mirror of [[personalizedPageRank]]: chained CTEs from the
@@ -377,12 +357,6 @@ object Graph {
       .select(col("vec_id").as("node"),
         when(col("vec_id") % 5 === 0, col("label")).as("seed_label"))
 
-  /** The scale-path pair source for label propagation: multiprobe LSH
-    * band join at the same τ = 0.2 the exact anchor uses. At this loose
-    * threshold a pair collides per 5-bit table with p = (1−acos(.2)/π)⁵
-    * ≈ 0.057; multiprobe lifts the per-table hit to p⁵ + 5p⁴(1−p) ≈
-    * 0.28, so 24 tables leave a per-pair miss of ≈ 0.722²⁴ ≈ 4·10⁻⁴ at
-    * half the band fan-out of the τ=0.45 default config. */
   /** Effective τ for the similarity-graph family: the analyst's 0.2
     * below the tuned corpus size, density-governed above it
     * ([[Dedup.adaptiveTau]] — the r7 3× probe showed the EDGE SET at
@@ -393,7 +367,17 @@ object Graph {
   private def lpTau(s: SparkSession, dir: String): Double =
     Dedup.memoTau(s, dir, 0.2)
 
-  private def lpAnnPairs(s: SparkSession, dir: String): DataFrame = {
+  /** `loop` over the scale-path pair source of the similarity-graph
+    * family: multiprobe LSH band join at the same τ = 0.2 the exact
+    * anchor uses. At this loose threshold a pair collides per 5-bit
+    * table with p = (1−acos(.2)/π)⁵ ≈ 0.057; multiprobe lifts the
+    * per-table hit to p⁵ + 5p⁴(1−p) ≈ 0.28, so 24 tables leave a
+    * per-pair miss of ≈ 0.722²⁴ ≈ 4·10⁻⁴ at half the band fan-out of
+    * the τ=0.45 default config. The pairs' checkpoint is released once
+    * `loop` returns: [[labelPropagation]] and [[kCore]] return a
+    * checkpoint of their own, so nothing reads the pairs after that. */
+  private def onAnnPairs(s: SparkSession, dir: String)(
+      loop: DataFrame => DataFrame): DataFrame = {
     val emb = t(s, dir, "embeddings")
     // 24×5 is tuned (agreement 1.0) at ≤5k vectors; widen the bands
     // past that so bucket size stays bounded — the 3× scale probe
@@ -402,9 +386,11 @@ object Graph {
     // integer-step policy let occupancy oscillate 2× between corpus
     // doublings; the fractional table split holds it constant.
     val (bl, kh) = Dedup.adaptiveWidths(5, emb.count(), 5000L, 24)
-    Dedup.embeddingNearDupPairs(emb, "vec_id",
+    val pairs = Dedup.embeddingNearDupPairs(emb, "vec_id",
       "embedding", lpTau(s, dir), tables = 24, bits = bl,
       multiprobe = true, kHigh = kh)
+    try loop(pairs)
+    finally GraftBridge.release(pairs)
   }
 
   /** k-core decomposition by iterative peeling: drop nodes whose degree
@@ -424,12 +410,7 @@ object Graph {
     // Loop state is the shrinking edge list: node-set-only state
     // re-scanned the FULL round-0 edge list every round (50 s at the 3×
     // probe — the peel exists precisely because the edge list shrinks).
-    import org.apache.spark.sql.GraftBridge
-    val e0 = pairs.select(explode(array(
-        struct(col(idA).as("src"), col(idB).as("dst")),
-        struct(col(idB).as("src"), col(idA).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .localCheckpoint()
+    val e0 = bidirectional(pairs, idA, idB).localCheckpoint()
     // `keep` is node-sized, but a checkpointed frame has no stats, so
     // the planner would default the survivor joins to sort-merge —
     // re-sorting the edge list twice per round. Broadcast whenever the
@@ -497,10 +478,7 @@ object Graph {
       // dst-layout (exchange-free frontier distinct) at 0.80× @32c /
       // 0.97× @4c — three node-sized rounds don't amortize an entry
       // repartition + double materialization. See OPTIMIZATION_r16.md.
-      val ed = ab.select(explode(array(
-          struct(col("a").as("src"), col("b").as("dst")),
-          struct(col("b").as("src"), col("a").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      val ed = bidirectional(ab, "a", "b")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val seeds0 = seed0.localCheckpoint()
       // reached set with its hop, read twice a round: [[Fixpoint]]'s every = 1
@@ -564,12 +542,10 @@ object Graph {
     // personalized PageRank: teleport mass lands only on a SEED SET
     // (here: nation-3 suppliers) instead of uniformly — the relevance
     // score "importance as seen from these seeds" used for seed-based
-    // corpus expansion and related-entity ranking. Same per-iteration
-    // shape as pageRank (one node-sized contribution join + one
-    // edge-sized equi-join/agg, decimal sums, per-step rounding); the
-    // teleport vector is a node-frame left join, so dangling mass
-    // behaves exactly as in the uniform variant. Top-50 by rank keeps
-    // the output focused on the seed neighborhood.
+    // corpus expansion and related-entity ranking. The same recurrence
+    // as graph_pagerank ([[rankLoop]]), with the teleport share carried
+    // on the edge asset. Top-50 by rank keeps the output focused on the
+    // seed neighborhood.
     "graph_ppr" -> { (s, dir) =>
       val seeds = t(s, dir, "supplier")
         .filter(col("s_nationkey") === 3)
@@ -608,8 +584,8 @@ object Graph {
     // majority vote); audit_label_prop_agreement below tracks per-node
     // agreement with the exact anchor each round.
     "graph_label_prop_ann" -> { (s, dir) =>
-      labelPropagation(lpNodes(s, dir),
-        lpAnnPairs(s, dir), "id_a", "id_b", 2)
+      onAnnPairs(s, dir)(labelPropagation(lpNodes(s, dir), _,
+        "id_a", "id_b", 2))
         .orderBy(col("node"))
     },
 
@@ -621,8 +597,8 @@ object Graph {
       val exact = labelPropagation(lpNodes(s, dir),
           Dedup.exactCosinePairs(s, dir, lpTau(s, dir)), "id_a", "id_b", 2)
         .select(col("node"), col("label").as("exact_label"))
-      val ann = labelPropagation(lpNodes(s, dir),
-          lpAnnPairs(s, dir), "id_a", "id_b", 2)
+      val ann = onAnnPairs(s, dir)(labelPropagation(lpNodes(s, dir), _,
+          "id_a", "id_b", 2))
         .select(col("node"), col("label").as("ann_label"))
       exact.join(ann, Seq("node"))
         .agg(count(lit(1)).as("n_nodes"),
@@ -649,7 +625,7 @@ object Graph {
     // learned this the hard way in round 5). Rows-only: LSH recall < 1
     // lowers some degrees, which can peel a borderline node early.
     "graph_kcore_ann" -> { (s, dir) =>
-      kCore(lpAnnPairs(s, dir), "id_a", "id_b", KCoreK, KCoreRounds)
+      onAnnPairs(s, dir)(kCore(_, "id_a", "id_b", KCoreK, KCoreRounds))
         .orderBy(col("node"))
     },
 
@@ -658,8 +634,8 @@ object Graph {
     "audit_kcore_agreement" -> { (s, dir) =>
       val exact = kCore(Dedup.exactCosinePairs(s, dir, lpTau(s, dir)),
         "id_a", "id_b", KCoreK, KCoreRounds).select(col("node"))
-      val ann = kCore(lpAnnPairs(s, dir),
-        "id_a", "id_b", KCoreK, KCoreRounds)
+      val ann = onAnnPairs(s, dir)(kCore(_,
+        "id_a", "id_b", KCoreK, KCoreRounds))
         .select(col("node").as("node_ann"))
       exact.join(ann, col("node") === col("node_ann"), "full_outer")
         .agg(count(col("node")).as("n_exact"),

@@ -284,31 +284,20 @@ class IncrementalSpec extends AnyFunSuite with SparkSuite {
   test("pagerank on a directed edge list keeps its sink and follows the " +
       "recurrence") {
     import spark.implicits._
-    import scala.math.BigDecimal.RoundingMode.HALF_UP
     // node 5 is a sink: it receives rank from 2 and 4 but is never a src
     val edges = Seq(1L -> 2L, 1L -> 3L, 2L -> 3L, 2L -> 5L, 3L -> 1L,
       3L -> 4L, 4L -> 5L)
-    val got = Graph.pageRank(edges.toDF("src", "dst")).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    // the same recurrence in plain Scala: n counts the srcs, a node's
-    // per-edge share rank/outdeg is rounded to 12 dp (DECIMAL(18,12)),
-    // and so is every new rank
-    val outDeg = edges.groupBy(_._1).map { case (v, es) => v -> es.size }
-    val n = outDeg.size
-    def dp12(x: Double) = BigDecimal(x).setScale(12, HALF_UP)
-    val teleport = (1.0 - Graph.Damping) / n
-    var want = outDeg.keys.map(_ -> dp12(1.0 / n).toDouble).toMap
-    for (_ <- 1 to Graph.Iterations) {
-      val share = want.collect { case (v, r) if outDeg.contains(v) =>
-        v -> dp12(r / outDeg(v)) }
-      want = edges.filter(e => share.contains(e._1)).groupBy(_._2).map {
-        case (d, in) => d -> dp12(teleport +
-          Graph.Damping * in.map(e => share(e._1)).sum.toDouble).toDouble
+    // the second case adds node 6, a source: it has no in-edge. The
+    // reference counts src ∪ dst in n, keeps a source at its teleport
+    // share and passes nothing on from a sink.
+    Seq(edges, edges :+ (6L -> 1L)).foreach { es =>
+      val got = Graph.pageRank(es.toDF("src", "dst")).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val want = PageRankReference(es, None, Graph.Iterations)
+      assert(got.keySet == want.keySet)
+      got.foreach { case (v, r) =>
+        assert(math.abs(r - want(v)) < 1e-12, s"node $v: $r vs ${want(v)}")
       }
-    }
-    assert(got.keySet == Set(1L, 2L, 3L, 4L, 5L))
-    got.foreach { case (v, r) =>
-      assert(math.abs(r - want(v)) < 1e-12, s"node $v: $r vs ${want(v)}")
     }
   }
 

@@ -798,6 +798,17 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     assert(out.count(_.getBoolean(2)) == 1)
   }
 
+  test("graph_label_prop_ann releases its ANN pair checkpoint") {
+    // RDDs pinned by the query, not the net count: an earlier test's
+    // RDD that a GC drops meanwhile would hide one left behind here
+    def pinnedIds = spark.sparkContext.getPersistentRDDs.keySet
+    val base = pinnedIds
+    Graph.queries("graph_label_prop_ann")(spark, "/root/testdata/sf0.001")
+      .collect()
+    val added = pinnedIds -- base
+    assert(added.size <= 1, s"only the result may stay pinned: $added")
+  }
+
   test("persisted IVF index probe equals the in-session ivfTopK") {
     val dir = "/root/testdata/sf0.001"
     val e = spark.read.parquet(s"$dir/embeddings.parquet")

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 import graft.SparkEntry
 import graft.SparkSuite
@@ -336,10 +337,37 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("BFS frontier expansion plans with equi-joins only") {
-    val plan = formatted(q("graph_bfs_hops"))
-    assert(!plan.contains("BroadcastNestedLoopJoin") &&
-      !plan.contains("CartesianProduct"),
-      s"BFS frontier join fell back to a nested loop:\n$plan")
+    import spark.implicits._
+    import org.apache.spark.sql.GraftBridge
+    import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // the loop's plans are executed (and checkpointed) while the frame is
+    // built, so they are caught as they run, not read off the result
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val pairs = (1L to 6L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val seeds = Seq(Tuple1(1L)).toDF("node")
+    spark.listenerManager.register(listener)
+    try {
+      Graph.bfsHops(pairs, "id_a", "id_b", seeds, 3, cap = 0).collect()
+      GraftBridge.flushListenerBus(spark)
+    } finally spark.listenerManager.unregister(listener)
+    object H extends AdaptiveSparkPlanHelper
+    val joins = plans.asScala.toSeq.flatMap(H.collect(_) {
+      case j: BaseJoinExec => j })
+    val nonEqui = joins.filter(_.leftKeys.isEmpty)
+    assert(nonEqui.isEmpty, s"frontier join without keys:\n${
+      nonEqui.mkString("\n")}")
+    // the frontier ⋈ edges join and the novelty anti-join
+    assert(Seq(Inner, LeftAnti).forall(t => joins.exists(_.joinType == t)),
+      joins.map(_.nodeName).mkString(", "))
   }
 
   test("building a query starts no job for its table reads") {
